@@ -207,8 +207,11 @@ object Bench {
     // prescribes: persist the full JSON to a file and print a SECOND,
     // compact summary line (total/n/errors fits any tail). The full line —
     // the original contract — is unchanged and still printed first.
+    // An iso child reports through its stdout only: its parent run (or
+    // tools/abbench.sh) owns the report file, which the child's partial
+    // row set must not overwrite.
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
-    try java.nio.file.Files.writeString(
+    if (!isoChild) try java.nio.file.Files.writeString(
       java.nio.file.Paths.get(outPath), fullJson + "\n")
     catch { case e: Throwable =>
       System.err.println(s"[graft-bench] bench_out write failed: ${e.getMessage}")

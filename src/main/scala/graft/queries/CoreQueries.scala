@@ -45,17 +45,26 @@ object CoreQueries {
     // planning + an RDD conversion of the scan; docTable/embTable route
     // ~110 call sites through here and the probe runs INSIDE the bench's
     // timed region, so each query build paid it per base-table read.
-    // The split count is deterministic per (dir, table, parallelism) for
-    // a fixed session config — cache it for the JVM's lifetime (r19
-    // advice; testdata is immutable for the run).
-    val n = splitCountCache.computeIfAbsent(s"$dir/$name@$target",
+    // The split count is deterministic per (dir, table, parallelism,
+    // file-split confs) — cache it for the JVM's lifetime (testdata is
+    // immutable for the run); a session with other split confs gets its
+    // own entry instead of a stale count.
+    val n = splitCountCache.computeIfAbsent(splitCountKey(s, dir, name, target),
       _ => Integer.valueOf(df.rdd.getNumPartitions))
     if (n >= target) df
     else df.repartition(target, col(key))
   }
 
-  private val splitCountCache =
+  private[graft] val splitCountCache =
     new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+
+  /** The confs that decide how a parquet scan splits into partitions. */
+  private val splitConfs = Seq("spark.sql.files.maxPartitionBytes",
+    "spark.sql.files.openCostInBytes", "spark.sql.files.minPartitionNum")
+
+  private[graft] def splitCountKey(s: SparkSession, dir: String, name: String,
+      parallelism: Int): String =
+    splitConfs.map(k => s.conf.getOption(k).getOrElse("")).mkString(s"$dir/$name@$parallelism|", "|", "")
 
   /** Deterministic synthetic prediction/label/weight columns over lineitem —
     * the fixture for metric + gradient queries (FIXTURES.md §1): pred is a

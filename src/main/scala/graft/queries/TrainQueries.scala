@@ -153,7 +153,7 @@ object TrainQueries {
       // including the evaluator's per-row scoring — runs as ONE task
       // hash repartition on the key column (round-robin would sort each
       // input partition by the full row — array compares — first)
-      // Bench decomposition (tools/EstimatorProbe): fit ~3.8 s,
+      // Bench decomposition: fit ~3.8 s,
       // transform-to-ml-vectors + materialize ~1.5 s, evaluator ~0.7 s.
       // The r7 param plumbing adds NO cluster work to this row (its one
       // new job, the ranking group-weight normalizer, is LambdaRank-gated)

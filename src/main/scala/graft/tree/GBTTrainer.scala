@@ -3,6 +3,8 @@ package graft.tree
 import org.apache.spark.rdd.RDD
 import org.apache.spark.storage.StorageLevel
 
+import scala.reflect.ClassTag
+
 import graft.data.{Binning, HistogramCuts}
 import graft.model.{BoosterModel, Node, Tree}
 import graft.objective.{CoxGradients, LambdaRankGradients, LambdaRankObjective, Objective, SoftmaxObjective}
@@ -68,13 +70,6 @@ final case class TrainParams(
     oneDrop: Boolean = false,
     sampleType: String = "uniform", // | "weighted" (drop prob ∝ tree weight)
     normalizeType: String = "tree", // | "forest"
-    checkpointInterval: Int = 15,
-    // deferred prediction-cache updates: plain gbtree fits accumulate up to
-    // this many freshly-grown trees as on-the-fly margin adjustments (the
-    // same per-row tree-walk machinery DART dropout uses) before
-    // materializing a new margin RDD — one cache-advance Spark job per
-    // FLUSH instead of one per iteration. 1 = advance every iteration.
-    marginFlushInterval: Int = 8,
     // training parallelism floor: −1 = auto (repartition up to
     // defaultParallelism when the input arrives under-partitioned, e.g. a
     // single parquet file); 0 = never repartition (pins partition contents;
@@ -168,6 +163,37 @@ private[tree] final case class SplitCandidate(
     gl: Double, hl: Double, gr: Double, hr: Double, wl: Double, wr: Double,
     catRight: Array[Int])
 
+object GBTTrainer {
+  /** Committed trees a plain fit holds back from the prediction cache
+    * before one flush job bakes them in. */
+  private[tree] val MarginFlushInterval = 8
+  /** Boosting rounds between localCheckpoints of the prediction cache. */
+  private[tree] val CheckpointInterval = 15
+
+  /** Whether a cache advanced from round `from` to round `to` crosses a
+    * checkpoint boundary — the one checkpoint cadence, counted in rounds. */
+  private[tree] def checkpointDue(from: Int, to: Int): Boolean =
+    to / CheckpointInterval > from / CheckpointInterval
+
+  /** The training parallelism floor: the partition count a fit runs on.
+    * An under-partitioned input (a single parquet file → 1-3 partitions →
+    * 1-3 training tasks regardless of cluster size) is lifted to
+    * `minTrainPartitions` (−1 = defaultParallelism); 0 keeps the input's
+    * partitions. Never lowers the input's count. */
+  private[tree] def trainPartitions(params: TrainParams, data: RDD[_]): Int =
+    math.max(data.getNumPartitions, params.minTrainPartitions match {
+      case -1 => data.sparkContext.defaultParallelism
+      case n => n
+    })
+
+  /** Repartition to the floor when the input is under it: one shuffle,
+    * amortized over every boosting round via shuffle-file reuse. */
+  private[tree] def spread[T: ClassTag](params: TrainParams, data: RDD[T]): RDD[T] = {
+    val n = trainPartitions(params, data)
+    if (n > data.getNumPartitions) data.repartition(n) else data
+  }
+}
+
 /** Distributed gradient-boosted-tree trainer: the reference's learner loop
   * (`src/learner.cc:1114` UpdateOneIter) + hist updater
   * (`src/tree/updater_quantile_hist.cc:96-180`) re-expressed as a
@@ -180,12 +206,13 @@ private[tree] final case class SplitCandidate(
   * `GHistIndexMatrix` analog `src/data/gradient_index.h`) is cached once;
   * per level ONE pass builds histograms for ALL frontier nodes; the
   * subtraction trick (`histogram.h:203-213`) halves that work; margins are
-  * a cached sibling RDD updated per iteration (prediction cache,
-  * `src/gbm/gbtree.cc:631-660`) with periodic localCheckpoint to bound
-  * lineage. Nothing driver-side scales with rows — only with
-  * nodes × features × bins.
+  * packed into the cached rows and advanced by one flush routine
+  * (prediction cache, `src/gbm/gbtree.cc:631-660`) with periodic
+  * localCheckpoint to bound lineage. Nothing driver-side scales with rows —
+  * only with nodes × features × bins.
   */
 final class GBTTrainer(params: TrainParams) extends Serializable {
+  import GBTTrainer._
 
   private val isMulti = params.numClass > 1
   private val numGroups = math.max(params.numClass, 1)
@@ -203,52 +230,24 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
   /** User eval metric for the watch/early-stopping loop. */
   def withCustomMetric(m: CustomEvalMetric): this.type = { customMetric = Some(m); this }
 
-  /** Defend against under-partitioned inputs (a single parquet file → 1-3
-    * partitions → 1-3 training tasks regardless of cluster size): lift to
-    * the parallelism floor before the multi-pass training loop. One shuffle,
-    * amortized over every boosting round via shuffle-file reuse. */
-  private def ensurePar[T: scala.reflect.ClassTag](data: RDD[T]): RDD[T] = {
-    val target = params.minTrainPartitions match {
-      case -1 => data.sparkContext.defaultParallelism
-      case 0 => 0
-      case n => n
-    }
-    if (target > data.getNumPartitions) data.repartition(target) else data
-  }
-
   /** data: (dense features with NaN=missing, label, weight). */
   def fit(dataIn: RDD[(Array[Double], Double, Double)]): BoosterModel = {
-    val data = ensurePar(dataIn)
+    val data = spread(params, dataIn)
     params.treeMethod match {
-    case "hist" =>
       // column count is unified inside the sketch pass (ref
       // MetaInfo::SynchronizeNumberOfColumns, include/xgboost/data.h:191)
-      val cuts = findCuts(data)
-      val numFeatures = cuts.numFeatures
-      val binned = data.zipWithUniqueId().map { case ((f, y, w), id) =>
-        BInst(cuts.binRow(f), y, w, id)
-      }.persist(StorageLevel.MEMORY_AND_DISK)
-      binned.count()
-
-      val model = fitBinned(binned, cuts, numFeatures)
-      binned.unpersist(blocking = false)
-      model
-    case "approx" => fitApprox(data)
-    case "exact" =>
+      case "hist" =>
+        val cuts = findCuts(data)
+        fitCached(data, cuts, cuts.numFeatures)(denseRow(cuts))
+      case "approx" => fitApprox(data)
       // grow_colmaker semantics via distinct-value cuts: with every
       // distinct value its own bin, bin-space enumeration IS the exact
       // greedy scan over sorted columns (Binning.findCutsExact doc)
-      val cuts = Binning.findCutsExact(data.map(r => (r._1, r._3)), 0)
-      val numFeatures = cuts.numFeatures
-      val binned = data.zipWithUniqueId().map { case ((f, y, w), id) =>
-        BInst(cuts.binRow(f), y, w, id)
-      }.persist(StorageLevel.MEMORY_AND_DISK)
-      binned.count()
-      val model = fitBinned(binned, cuts, numFeatures)
-      binned.unpersist(blocking = false)
-      model
-    case other => throw new IllegalArgumentException(
-      s"unknown tree_method: $other (supported: exact, hist, approx)")
+      case "exact" =>
+        val cuts = Binning.findCutsExact(data.map(r => (r._1, r._3)), 0)
+        fitCached(data, cuts, cuts.numFeatures)(denseRow(cuts))
+      case other => throw new IllegalArgumentException(
+        s"unknown tree_method: $other (supported: exact, hist, approx)")
     }
   }
 
@@ -268,21 +267,11 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
     * Full per-watch log via [[evalHistoryFull]]. */
   def fitWatches(dataIn: RDD[(Array[Double], Double, Double)],
       watchesIn: Seq[(String, RDD[(Array[Double], Double, Double)])]): BoosterModel = {
-    val data = ensurePar(dataIn)
+    val data = spread(params, dataIn)
     require(params.treeMethod == "hist", "eval watches support tree_method=hist only")
     val cuts = findCuts(data)
-    val numFeatures = cuts.numFeatures
-    def toBinned(d: RDD[(Array[Double], Double, Double)]) =
-      d.zipWithUniqueId().map { case ((f, y, w), id) => BInst(cuts.binRow(f), y, w, id) }
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    val binned = toBinned(data); binned.count()
-    val watches = watchesIn.map { case (n, d) =>
-      val b = toBinned(ensurePar(d)); b.count(); (n, b)
-    }
-    val model = fitBinned(binned, cuts, numFeatures, watches)
-    binned.unpersist(blocking = false)
-    watches.foreach(_._2.unpersist(blocking = false))
-    model
+    fitCached(data, cuts, cuts.numFeatures,
+      watches = watchesIn.map { case (n, d) => (n, spread(params, d)) })(denseRow(cuts))
   }
 
   /** Per-row base-margin fit (ref `base_margin_` in MetaInfo,
@@ -292,20 +281,12 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
     * its own margins, exactly like the reference's inplace-predict with
     * base_margin. Single-output hist only. */
   def fitWithBaseMargin(dataIn: RDD[(Array[Double], Double, Double, Double)]): BoosterModel = {
-    val data = ensurePar(dataIn)
+    val data = spread(params, dataIn)
     require(params.treeMethod == "hist", "base margins support tree_method=hist only")
     require(!isMulti, "per-row base margins support single-output objectives only")
     val cuts = findCuts(data.map(r => (r._1, r._2, r._3)))
-    val numFeatures = cuts.numFeatures
-    val binned = data.zipWithUniqueId().map { case ((f, y, w, _), id) =>
-      BInst(cuts.binRow(f), y, w, id)
-    }.persist(StorageLevel.MEMORY_AND_DISK)
-    binned.count()
-    val margins = data.map(r => Array(r._4))
-    val model = fitBinned(binned, cuts, numFeatures,
-      initMargins = Some(margins), baseOverride = Some(Array(0.0)))
-    binned.unpersist(blocking = false)
-    model
+    fitCached(data, cuts, cuts.numFeatures, initMargins = Some(data.map(r => Array(r._4))),
+      baseOverride = Some(Array(0.0))) { case ((f, y, w, _), id) => BInst(cuts.binRow(f), y, w, id) }
   }
 
   /** Continue boosting from an existing model (the reference's `xgb_model`
@@ -314,26 +295,45 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
     * appended, with margins seeded from the previous model's predictions.
     * gbtree + hist only (dart dropout would have to rescale prior trees). */
   def fitContinue(dataIn: RDD[(Array[Double], Double, Double)], prev: BoosterModel): BoosterModel = {
-    val data = ensurePar(dataIn)
+    val data = spread(params, dataIn)
     require(params.treeMethod == "hist", "continuation supports tree_method=hist only")
     require(params.booster != "dart", "continuation supports the gbtree booster only")
     require(prev.numGroups == numGroups,
       s"previous model has ${prev.numGroups} output groups, params give $numGroups")
     val cuts = findCuts(data)
     val numFeatures = math.max(cuts.numFeatures, prev.numFeatures)
-    val binned = data.zipWithUniqueId().map { case ((f, y, w), id) =>
-      BInst(cuts.binRow(f), y, w, id)
-    }.persist(StorageLevel.MEMORY_AND_DISK)
-    binned.count()
-    val bPrev = binned.sparkContext.broadcast(prev)
-    val margins = data.map(r => bPrev.value.margin(r._1))
-    val cont = fitBinned(binned, cuts, numFeatures,
-      initMargins = Some(margins), baseOverride = Some(prev.baseScore.clone()))
-    binned.unpersist(blocking = false)
+    val bPrev = data.sparkContext.broadcast(prev)
+    val cont = fitCached(data, cuts, numFeatures,
+      initMargins = Some(data.map(r => bPrev.value.margin(r._1))),
+      baseOverride = Some(prev.baseScore.clone()))(denseRow(cuts))
     bPrev.destroy()
     BoosterModel(prev.trees ++ cont.trees, prev.treeWeights ++ cont.treeWeights,
       prev.treeGroup ++ cont.treeGroup, prev.baseScore, params.objective,
       numGroups, numFeatures)
+  }
+
+  /** The one bin-and-cache step behind every binned entry: quantize each
+    * row on the TRAIN `cuts` under a stable row id, cache the binned rows
+    * (and every watch set, binned on the same cuts) for the multi-pass
+    * loop, train, then release the caches. Caller-supplied `initMargins`
+    * must be a map of the same parent as `data` (positional zip). */
+  private def fitCached[T](data: RDD[T], cuts: HistogramCuts, numFeatures: Int,
+      watches: Seq[(String, RDD[T])] = Nil,
+      initMargins: Option[RDD[Array[Double]]] = None,
+      baseOverride: Option[Array[Double]] = None)(bin: ((T, Long)) => BInst): BoosterModel = {
+    def cached(d: RDD[T]): RDD[BInst] = {
+      val b = d.zipWithUniqueId().map(bin).persist(StorageLevel.MEMORY_AND_DISK)
+      b.count()
+      b
+    }
+    val binned = cached(data)
+    val watchSets = watches.map { case (n, d) => (n, cached(d)) }
+    try fitBinned(binned, cuts, numFeatures, watchSets, initMargins, baseOverride)
+    finally (binned +: watchSets.map(_._2)).foreach(_.unpersist(blocking = false))
+  }
+
+  private def denseRow(cuts: HistogramCuts): (((Array[Double], Double, Double), Long)) => BInst = {
+    case ((f, y, w), id) => BInst(cuts.binRow(f), y, w, id)
   }
 
   /** (iteration, watch-metric value) per evaluated round of the last fit. */
@@ -433,7 +433,7 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
       cacheRaw = binned.zip(old).map { case ((r, m), (row, _)) =>
         val o = m.clone(); o(0) += params.eta * bShape.value.predictLeaf(r)(0); (row, o)
       }.persist(StorageLevel.MEMORY_AND_DISK)
-      if ((iter + 1) % params.checkpointInterval == 0) cacheRaw.localCheckpoint()
+      if (checkpointDue(iter, iter + 1)) cacheRaw.localCheckpoint()
       cacheRaw.count()
       old.unpersist(blocking = false)
       binned.unpersist(blocking = false)
@@ -450,18 +450,12 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
     * `labels_lower_bound_`/`labels_upper_bound_`, `include/xgboost/
     * data.h:77`). */
   def fitSurvival(dataIn: RDD[(Array[Double], Double, Double, Double)]): BoosterModel = {
-    val data = ensurePar(dataIn)
+    val data = spread(params, dataIn)
     require(params.treeMethod == "hist", "survival objectives support tree_method=hist only")
     val cuts = findCuts(data.map(r => (r._1, r._2, r._4)))
-    val numFeatures = cuts.numFeatures
-    val binned = data.zipWithUniqueId().map { case ((f, lo, hi, w), id) =>
+    fitCached(data, cuts, cuts.numFeatures) { case ((f, lo, hi, w), id) =>
       BInst(cuts.binRow(f), lo, w, id, label2 = hi)
-    }.persist(StorageLevel.MEMORY_AND_DISK)
-    binned.count()
-
-    val model = fitBinned(binned, cuts, numFeatures)
-    binned.unpersist(blocking = false)
-    model
+    }
   }
 
   /** Sparse entry (ref CSR adapter `src/data/adapter.h:216-308`): rows are
@@ -471,15 +465,11 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
   def fitSparse(dataIn: RDD[(Array[Int], Array[Double], Double, Double)],
       numFeatures: Int): BoosterModel = {
     require(params.treeMethod == "hist", "sparse input supports tree_method=hist only")
-    val data = ensurePar(dataIn)
+    val data = spread(params, dataIn)
     val cuts = Binning.findCutsSparse(data.map(r => (r._1, r._2, r._4)), numFeatures, params.maxBin)
-    val binned = data.zipWithUniqueId().map { case ((idx, vs, y, w), id) =>
+    fitCached(data, cuts, numFeatures) { case ((idx, vs, y, w), id) =>
       BInst(cuts.binRowSparse(idx, vs), y, w, id, idx = idx)
-    }.persist(StorageLevel.MEMORY_AND_DISK)
-    binned.count()
-    val model = fitBinned(binned, cuts, numFeatures)
-    binned.unpersist(blocking = false)
-    model
+    }
   }
 
   /** rank:* entry: (features, relevance label, weight, qid). Co-partitions
@@ -488,35 +478,22 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
     * every per-iteration λ-gradient pass is a shuffle-free partition walk
     * over contiguous groups. */
   def fitRanking(dataIn: RDD[(Array[Double], Double, Double, Long)]): BoosterModel = {
-    // no ensurePar here: the qid partitionBy below IS the spreading shuffle;
-    // only its partition COUNT needs the parallelism floor. The shuffle runs
-    // FIRST so every subsequent pass (sketch included — a single parquet
-    // file would otherwise sketch on 1-3 tasks) is spread across the cluster.
-    val data = dataIn
     require(params.treeMethod == "hist", "rank objectives support tree_method=hist only")
-    val nParts = params.minTrainPartitions match {
-      case -1 => math.max(data.getNumPartitions, data.sparkContext.defaultParallelism)
-      case 0 => math.max(data.getNumPartitions, 1)
-      case n => math.max(n, 1)
-    }
-    // The qid co-partitioning shuffle runs once; BOTH passes below re-read
-    // its shuffle files (no intermediate persist — caching the pre-binned
-    // tuple rows was measured pure heap pressure). The sketch pass needs no
-    // qid order, so the in-partition sort happens once, fused into the
-    // binned-cache build.
-    val parts = data.map { case (f, y, w, q) => (q, (f, y, w)) }
-      .partitionBy(new org.apache.spark.HashPartitioner(nParts))
+    // The qid partitionBy IS the spreading shuffle, so only its partition
+    // COUNT takes the parallelism floor. It runs FIRST so every later pass
+    // (sketch included — a single parquet file would otherwise sketch on
+    // 1-3 tasks) is spread. The sketch and the binned-cache build both
+    // re-read its shuffle files (no intermediate persist — caching the
+    // pre-binned tuple rows was measured pure heap pressure); the sketch
+    // needs no qid order, so the in-partition sort runs once, fused into
+    // the binned-cache build.
+    val parts = dataIn.map { case (f, y, w, q) => (q, (f, y, w)) }
+      .partitionBy(new org.apache.spark.HashPartitioner(trainPartitions(params, dataIn)))
     val cuts = findCuts(parts.map { case (_, (f, y, w)) => (f, y, w) })
-    val numFeatures = cuts.numFeatures
-    val binned = parts
-      .mapPartitions(it => it.toArray.sortBy(_._1).iterator, preservesPartitioning = true)
-      .zipWithUniqueId().map { case ((q, (f, y, w)), id) =>
-        BInst(cuts.binRow(f), y, w, id, qid = q)
-      }.persist(StorageLevel.MEMORY_AND_DISK)
-    binned.count()
-    val model = fitBinned(binned, cuts, numFeatures)
-    binned.unpersist(blocking = false)
-    model
+    val sorted = parts.mapPartitions(it => it.toArray.sortBy(_._1).iterator, preservesPartitioning = true)
+    fitCached(sorted, cuts, cuts.numFeatures) { case ((q, (f, y, w)), id) =>
+      BInst(cuts.binRow(f), y, w, id, qid = q)
+    }
   }
 
   private def findCuts(data: RDD[(Array[Double], Double, Double)]): HistogramCuts = {
@@ -616,7 +593,7 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
     // of the same parent `data` — positional by construction. The all-base
     // initial cache is a constant-per-row map over the already-persisted
     // binned rows: leaving it lazy skips one persist+count job and its
-    // storage; the first advance/flush persists its successor.
+    // storage; the first flush persists its successor.
     var cache: RDD[(BInst, Array[Double])] = initMargins match {
       case Some(m) =>
         val p = binned.zip(m).persist(StorageLevel.MEMORY_AND_DISK); p.count(); p
@@ -645,26 +622,24 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
     var stop = false
     var stopFromCallback = false // callback stop keeps all trees (no truncation)
 
-    // ---- deferred prediction-cache updates ----
-    // A freshly-committed tree does not need to be baked into the margin RDD
-    // before the next iteration: `gradOf` already adjusts cached margins by
-    // a tree list (DART dropout subtracts w·leaf — a pending tree with
-    // weight −w ADDS its contribution). So plain fits keep new trees in a
-    // pending list and only materialize a new margin RDD every
-    // `marginFlushInterval` trees: one cache-advance job per flush instead
-    // of one per iteration, at the cost of ≤interval extra depth-d tree
-    // walks per row inside the gradient passes. Addition order of tree
-    // contributions is unchanged, so the trained model is bit-identical.
-    // Gated off whenever something reads `margins` directly mid-loop
-    // without pending-aware adjustment: DART (owns the dropped list),
-    // watch/early-stop metrics, eval caches, per-iteration scale stats.
-    // Risk-set/ranking global-gradient objectives participate: their
-    // computers take the pending list and adjust margins on the fly.
-    val deferMargins = params.marginFlushInterval > 1 &&
-      params.booster == "gbtree" && !watching && watchSets.isEmpty &&
-      (isMulti || !obj.needsScale)
+    // ---- prediction-cache updates (gbtree.cc:631-660) ----
+    // Every committed tree and every DART weight delta joins `pending`, and
+    // ONE routine, flushPending, bakes that list into the training cache
+    // and every watch cache. Until then `gradOf` adjusts cached margins by
+    // the pending trees on the fly (DART dropout subtracts w·leaf — a
+    // pending tree with weight −w ADDS its contribution), so a plain fit
+    // flushes once per MarginFlushInterval trees instead of once per round,
+    // at the cost of that many extra depth-d tree walks per row in the
+    // gradient passes. Whatever reads stored margins without that
+    // adjustment flushes every round: DART (its dropped list is the
+    // adjustment), watch/early-stop metrics, callbacks, per-round scale
+    // stats. Risk-set/ranking gradient computers take the pending list.
+    // Contributions add in commit order either way, so the trained model
+    // is bit-identical whenever the flushes happen.
+    val flushEveryRound = params.booster == "dart" || watching || watchSets.nonEmpty ||
+      (!isMulti && obj.needsScale)
     val pending = new ArrayBuffer[(TreeShape, Double, Int)]
-    var flushCount = 0
+    var flushedRounds = 0 // rounds the stored caches hold
 
     // ---- Unbiased LambdaMART position-bias state (driver-side: 4 arrays
     // of maxPositions ≤ 32 doubles; ref lambdarank_obj.cc li_full_/
@@ -701,27 +676,30 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
         if (sumGW > 0) nGroups.toDouble / sumGW else 1.0
       case _ => 1.0
     }
-    def flushPending(): Unit = if (pending.nonEmpty) {
+    def flushPending(rounds: Int): Unit = {
       val bP = sc.broadcast(pending.toArray)
-      val next = cache.map { case (r, m) =>
-        val out = m.clone()
-        val p = bP.value
-        var i = 0
-        while (i < p.length) {
-          val (sh, w, g) = p(i)
-          out(g) += w * sh.predictLeaf(r)(0)
-          i += 1
-        }
-        (r, out)
-      }.persist(StorageLevel.MEMORY_AND_DISK)
-      flushCount += 1
-      // lineage grows one map per flush; truncate on the same cadence (in
-      // iterations) as the non-deferred path's checkpointInterval
-      if (flushCount % math.max(1, params.checkpointInterval / params.marginFlushInterval) == 0)
-        next.localCheckpoint()
-      next.count()
-      cache.unpersist(blocking = false)
-      cache = next
+      // lineage grows one map per flush; truncate every CheckpointInterval rounds
+      val checkpoint = checkpointDue(flushedRounds, rounds)
+      def flushed(c: RDD[(BInst, Array[Double])]): RDD[(BInst, Array[Double])] = {
+        val next = c.map { case (r, m) =>
+          val out = m.clone()
+          val p = bP.value
+          var i = 0
+          while (i < p.length) {
+            val (sh, w, g) = p(i)
+            out(g) += w * sh.predictLeaf(r)(0)
+            i += 1
+          }
+          (r, out)
+        }.persist(StorageLevel.MEMORY_AND_DISK)
+        if (checkpoint) next.localCheckpoint()
+        next.count()
+        c.unpersist(blocking = false)
+        next
+      }
+      cache = flushed(cache)
+      watchCaches = watchCaches.map(flushed)
+      flushedRounds = rounds
       pending.clear()
     }
 
@@ -842,46 +820,13 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
         shapes += s; treeGroupBuf += newGroups(i); treeWeightsBuf += newW
       }
 
-      // ---- margin update (prediction cache, gbtree.cc:631-660) ----
-      // deferred path: queue the new layer and only materialize every
-      // `marginFlushInterval` trees (margins is never read after the loop,
-      // so the final partial batch needs no flush at all)
-      if (deferMargins) {
-        var p = 0
-        while (p < newShapes.length) {
-          pending += ((newShapes(p), newW, newGroups(p)))
-          p += 1
-        }
-        if (pending.length >= params.marginFlushInterval) flushPending()
-      } else {
-      // applied identically to the train AND eval margin caches
-      val bNew = sc.broadcast(newShapes.zip(newGroups))
-      val bAdjust = sc.broadcast(weightDeltas.map { case (i, d) => (shapes(i), treeGroupBuf(i), d) })
-      def advance(c: RDD[(BInst, Array[Double])]): RDD[(BInst, Array[Double])] = {
-        val next = c.map { case (r, m) =>
-          val out = m.clone()
-          var g = 0
-          while (g < bNew.value.length) {
-            val (sh, grp) = bNew.value(g)
-            out(grp) += newW * sh.predictLeaf(r)(0)
-            g += 1
-          }
-          var d = 0
-          while (d < bAdjust.value.length) {
-            val (sh, grp, delta) = bAdjust.value(d)
-            out(grp) += delta * sh.predictLeaf(r)(0)
-            d += 1
-          }
-          (r, out)
-        }.persist(StorageLevel.MEMORY_AND_DISK)
-        if ((iter + 1) % params.checkpointInterval == 0) next.localCheckpoint()
-        next.count()
-        c.unpersist(blocking = false)
-        next
-      }
-      cache = advance(cache)
-      watchCaches = watchCaches.map(advance)
-      } // end margin-update branch
+      // ---- margin update: queue the new layer, then the DART deltas (the
+      // addition order the pinned digests depend on), and flush per the
+      // rule above (margins are never read after the loop, so a plain
+      // fit's final partial batch needs no flush at all) ----
+      newShapes.indices.foreach(p => pending += ((newShapes(p), newW, newGroups(p))))
+      weightDeltas.foreach { case (i, d) => pending += ((shapes(i), d, treeGroupBuf(i))) }
+      if (flushEveryRound || pending.length >= MarginFlushInterval) flushPending(iter + 1)
       globalGrads.foreach(_.unpersist(blocking = false))
 
       // ---- watch metrics + early stopping (learner.cc:1164 EvalOneIter,
@@ -1098,7 +1043,7 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
       // prune updater can collapse splits exactly (ref CollapseToLeaf)
       n.weight = SplitEnumerator.calcWeight(n.g, n.h, params, n.lowerBound, n.upperBound)
     }
-    finalizeShape(nodes)
+    nodesShape(nodes)
   }
 
   /** Grow one tree level-synchronously (ref UpdateTree,
@@ -1174,7 +1119,7 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
     nodes.foreach { n =>
       n.weight = SplitEnumerator.calcWeight(n.g, n.h, params, n.lowerBound, n.upperBound)
     }
-    finalizeShape(nodes)
+    nodesShape(nodes)
   }
 
   private def applySplit(nodes: ArrayBuffer[BuildNode], nid: Int, c: SplitCandidate): Unit = {
@@ -1243,8 +1188,6 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
       Array.tabulate(n)(i => nodes(i).h),
       Array.tabulate(n)(i => nodes(i).gain))
   }
-
-  private def finalizeShape(nodes: ArrayBuffer[BuildNode]): TreeShape = nodesShape(nodes)
 
   private def shapeToTree(s: TreeShape, cuts: HistogramCuts): Tree = {
     val n = s.feature.length
@@ -1397,28 +1340,15 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
   /** mean NDCG@k over qid-contiguous groups (ranking fits only). */
   private def evalNdcg(c: RDD[(BInst, Array[Double])], k: Int): Double = {
     val expGain = params.ndcgExpGain
-    val (s, n) = c.mapPartitions { it =>
-      val base = it.buffered
-      var sum = 0.0; var cnt = 0L
-      val buf = new ArrayBuffer[(Double, Double)] // (label, margin)
-      while (base.hasNext) {
-        buf.clear()
-        val q = base.head._1.qid
-        while (base.hasNext && base.head._1.qid == q) {
-          val (r, m) = base.next(); buf += ((r.label, m(0)))
-        }
-        def gain(l: Double) = if (expGain) math.pow(2.0, l) - 1.0 else l
-        def disc(r: Int) = 1.0 / (math.log(r + 1.0) / math.log(2.0))
-        val ranked = buf.indices.sortBy(i => (-buf(i)._2, i)).take(k)
-        val dcg = ranked.zipWithIndex.map { case (i, r) => gain(buf(i)._1) * disc(r + 1) }.sum
-        val idcg = buf.map(x => gain(x._1)).sortBy(-_).take(k).zipWithIndex
-          .map { case (g, r) => g * disc(r + 1) }.sum
-        sum += (if (idcg > 0) dcg / idcg else 0.0)
-        cnt += 1
-      }
-      Iterator.single((sum, cnt))
-    }.treeReduce((a, b) => (a._1 + b._1, a._2 + b._2), depth = graft.Agg.depth(c.getNumPartitions))
-    if (n > 0) s / n else 0.0
+    groupMean(c) { buf =>
+      def gain(l: Double) = if (expGain) math.pow(2.0, l) - 1.0 else l
+      def disc(r: Int) = 1.0 / (math.log(r + 1.0) / math.log(2.0))
+      val ranked = buf.indices.sortBy(i => (-buf(i)._1, i)).take(k)
+      val dcg = ranked.zipWithIndex.map { case (i, r) => gain(buf(i)._2) * disc(r + 1) }.sum
+      val idcg = buf.map(x => gain(x._2)).sortBy(-_).take(k).zipWithIndex
+        .map { case (g, r) => g * disc(r + 1) }.sum
+      Some(if (idcg > 0) dcg / idcg else 0.0)
+    }
   }
 
   /** Mean of a per-group statistic over qid-contiguous groups (ranking

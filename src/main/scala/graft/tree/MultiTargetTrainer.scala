@@ -57,13 +57,7 @@ final class MultiTargetTrainer(params: TrainParams, numTargets: Int,
 
   /** data: (features, labels — K targets or a class index, weight). */
   def fit(dataIn: RDD[(Array[Double], Array[Double], Double)]): BoosterModel = {
-    // same under-partitioned-input defense as GBTTrainer.ensurePar
-    val parTarget = params.minTrainPartitions match {
-      case -1 => dataIn.sparkContext.defaultParallelism
-      case n => n
-    }
-    val data =
-      if (parTarget > dataIn.getNumPartitions) dataIn.repartition(parTarget) else dataIn
+    val data = GBTTrainer.spread(params, dataIn)
     val sc = data.sparkContext
     val K = numTargets
     // column count unified inside the sketch pass (data.h:191 semantics)
@@ -103,10 +97,10 @@ final class MultiTargetTrainer(params: TrainParams, numTargets: Int,
         .persist(StorageLevel.MEMORY_AND_DISK)
     cache.count()
 
-    // Deferred margin flush — the same rework as GBTTrainer's packed
-    // cache (§ marginFlushInterval): committed-but-unflushed trees ride
+    // Deferred margin flush — the same rule as GBTTrainer's packed cache
+    // (§ prediction-cache updates): committed-but-unflushed trees ride
     // the gradient passes as on-the-fly leaf adjustments, and the cache
-    // advances once per `marginFlushInterval` trees (one count job per
+    // advances once per MarginFlushInterval trees (one count job per
     // flush instead of one per round — measured ~330 ms/round of pure
     // materialization at bench scale). Bit-identical by the same
     // argument: the adjusted margin adds pending trees' contributions in
@@ -115,10 +109,9 @@ final class MultiTargetTrainer(params: TrainParams, numTargets: Int,
     // and therefore every split and leaf — is unchanged. The final
     // round's flush is skipped entirely (the model never reads the
     // cache again).
-    val flushInterval = math.max(1, params.marginFlushInterval)
     val trees = new ArrayBuffer[Tree]
     val pending = new ArrayBuffer[MShape]
-    var flushCount = 0
+    var flushedRounds = 0
     var iter = 0
     while (iter < params.numRounds) {
       // NOT destroyed eagerly: the flush closure below rides the cache
@@ -130,7 +123,7 @@ final class MultiTargetTrainer(params: TrainParams, numTargets: Int,
       trees += shapeToTree(shape, cuts, K)
       pending += shape
 
-      if (pending.length >= flushInterval && iter + 1 < params.numRounds) {
+      if (pending.length >= GBTTrainer.MarginFlushInterval && iter + 1 < params.numRounds) {
         val bP = sc.broadcast(pending.toArray)
         val eta = params.eta
         val next = cache.map { case (r, m) =>
@@ -145,14 +138,11 @@ final class MultiTargetTrainer(params: TrainParams, numTargets: Int,
           }
           (r, out)
         }.persist(StorageLevel.MEMORY_AND_DISK)
-        flushCount += 1
-        // checkpoint cadence ≈ every checkpointInterval ITERATIONS, as
-        // the per-round path had
-        if (flushCount % math.max(1, params.checkpointInterval / flushInterval) == 0)
-          next.localCheckpoint()
+        if (GBTTrainer.checkpointDue(flushedRounds, iter + 1)) next.localCheckpoint()
         next.count()
         cache.unpersist(blocking = false)
         cache = next
+        flushedRounds = iter + 1
         pending.clear()
       }
       iter += 1
