@@ -294,8 +294,9 @@ object TrainQueries {
     // (with minTrainPartitions=0 so it stays that way): near-tie split
     // gains amplify last-ulp float-sum noise into different-but-equally-
     // valid trees, so bit-stability requires a pinned reduction order —
-    // multi-partition merge order is task-completion order, which no
-    // engine (reference included) pins across runs for float sums.
+    // histograms merge in partition order, but a multi-partition fit's
+    // quantile sketch and base score still merge in task-completion
+    // order, which no engine (reference included) pins across runs.
     "t_hash_hist" -> ((s, _) =>
       hashRow(s, new GBTTrainer(goldenParams()).fit(goldenRows(s)))),
 

@@ -73,11 +73,12 @@ final case class TrainParams(
     // training parallelism floor: −1 = auto (repartition up to
     // defaultParallelism when the input arrives under-partitioned, e.g. a
     // single parquet file); 0 = never repartition (pins partition contents;
-    // NOTE full bit-reproducibility across runs additionally requires a
-    // single input partition — multi-partition float sums merge in task-
-    // completion order, which near-tie split gains can amplify into
-    // different-but-equally-valid trees; see TrainQueries' golden rows);
-    // >0 = explicit floor
+    // NOTE histogram and root-total merges run in partition order, so the
+    // boosting loop over fixed partitions and cuts is bit-reproducible; what
+    // still varies between runs of a multi-partition fit is the quantile-
+    // sketch merge and the validation pass's base score, which near-tie
+    // split gains can amplify into different-but-equally-valid trees; see
+    // TrainQueries' golden rows); >0 = explicit floor
     minTrainPartitions: Int = -1
 )
 
@@ -163,6 +164,11 @@ private[tree] final case class SplitCandidate(
     gl: Double, hl: Double, gr: Double, hr: Double, wl: Double, wr: Double,
     catRight: Array[Int])
 
+/** One node's split-search input: its merged histogram, the features it
+  * may split on, its (G, H) totals and its monotone weight bounds. */
+private[tree] final case class NodeSearch(hist: Array[Double], features: Array[Int],
+    g: Double, h: Double, lo: Double, hi: Double)
+
 object GBTTrainer {
   /** Committed trees a plain fit holds back from the prediction cache
     * before one flush job bakes them in. */
@@ -197,17 +203,21 @@ object GBTTrainer {
 /** Distributed gradient-boosted-tree trainer: the reference's learner loop
   * (`src/learner.cc:1114` UpdateOneIter) + hist updater
   * (`src/tree/updater_quantile_hist.cc:96-180`) re-expressed as a
-  * driver-coordinated loop of Spark `treeAggregate`s. Each histogram
-  * allreduce (`src/tree/hist/histogram.h:177-202`) becomes one
-  * partial+final aggregation; the collective/tracker/barrier machinery of
-  * the reference is replaced by Spark's shuffle (SURVEY §3.1).
+  * driver-coordinated loop of Spark jobs, one per tree level. Each
+  * histogram allreduce (`src/tree/hist/histogram.h:177-202`) becomes one
+  * job whose tasks return packed per-partition partials, summed on the
+  * driver in partition order; the collective/tracker/barrier machinery of
+  * the reference is replaced by Spark's scheduler (SURVEY §3.1). Split
+  * search then runs on the driver's cores, node and feature chunk in
+  * parallel.
   *
   * Scale design: the quantized matrix (`Array[Int]` bins, the
   * `GHistIndexMatrix` analog `src/data/gradient_index.h`) is cached once;
-  * per level ONE pass builds histograms for ALL frontier nodes; the
-  * subtraction trick (`histogram.h:203-213`) halves that work; margins are
-  * packed into the cached rows and advanced by one flush routine
-  * (prediction cache, `src/gbm/gbtree.cc:631-660`) with periodic
+  * per level ONE pass builds histograms for ALL frontier nodes, and the
+  * root's pass also yields its (G, H) totals, so a depth-d tree costs d
+  * jobs; the subtraction trick (`histogram.h:203-213`) halves that work;
+  * margins are packed into the cached rows and advanced by one flush
+  * routine (prediction cache, `src/gbm/gbtree.cc:631-660`) with periodic
   * localCheckpoint to bound lineage. Nothing driver-side scales with rows —
   * only with nodes × features × bins.
   */
@@ -988,35 +998,35 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
 
     val nodes = new ArrayBuffer[BuildNode]
     val treeCols = colSampler.sampleTree(iter, params.colsampleBytree)
-    val (rootG, rootH) = aggregateTotals(cache, globalGrads, obj, softmax, grp, iter, droppedShapes)
-    nodes += new BuildNode(rootG, rootH, 0)
+    nodes += new BuildNode(0.0, 0.0, 0) // totals come from the root's histogram pass
     if (params.interactionConstraints.nonEmpty)
       nodes(0).allowed = Some((0 until numFeatures).toSet)
 
     val hists = collection.mutable.Map[Int, Array[Double]]()
-    hists(0) = aggregateHistograms(cache, globalGrads, cuts, obj, softmax,
-      grp, iter, Array(0), nodesShape(nodes), droppedShapes)(0)
+    val root = aggregateHistograms(cache, globalGrads, cuts, obj, softmax,
+      grp, iter, Array(0), nodesShape(nodes), droppedShapes)
+    nodes(0).g = root.totals(0); nodes(0).h = root.totals(1)
+    hists(0) = root.hist(0)
 
     // max-queue by (gain, then smaller nid) for deterministic tie-breaks
     val queue = collection.mutable.PriorityQueue.empty[(Double, Int, SplitCandidate)](
       Ordering.by { case (gain, nid, _) => (gain, -nid) })
-    def tryEnqueue(nid: Int): Unit = {
-      val n = nodes(nid)
-      if (params.maxDepth > 0 && n.depth >= params.maxDepth) return
-      val nodeCols0 = colSampler.sampleNode(
-        colSampler.sampleLevel(treeCols, iter, n.depth, params.colsampleBylevel),
-        iter, n.depth, nid, params.colsampleBynode)
-      val nodeCols = n.allowed match {
-        case Some(a) => nodeCols0.filter(a.contains)
-        case None => nodeCols0
-      }
-      SplitEnumerator.bestSplit(hists(nid), cuts, nodeCols, n.g, n.h, params,
-        n.lowerBound, n.upperBound) match {
-        case Some(c) if c.gain > 0 => queue.enqueue((c.gain, nid, c))
-        case _ => ()
+    def tryEnqueue(nids: Array[Int]): Unit = {
+      val open = nids.filter(nid => params.maxDepth <= 0 || nodes(nid).depth < params.maxDepth)
+      val found = SplitEnumerator.bestSplits(open.map { nid =>
+        val n = nodes(nid)
+        nodeSearch(hists(nid), n, colSampler.sampleNode(
+          colSampler.sampleLevel(treeCols, iter, n.depth, params.colsampleBylevel),
+          iter, n.depth, nid, params.colsampleBynode))
+      }, cuts, params)
+      open.indices.foreach { i =>
+        found(i) match {
+          case Some(c) if c.gain > 0 => queue.enqueue((c.gain, open(i), c))
+          case _ => ()
+        }
       }
     }
-    tryEnqueue(0)
+    tryEnqueue(Array(0))
 
     var leaves = 1
     val maxLeaves = if (params.maxLeaves > 0) params.maxLeaves else Int.MaxValue
@@ -1027,7 +1037,7 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
       val l = nodes(nid).left; val r = nodes(nid).right
       val (small, large) = if (nodes(l).h <= nodes(r).h) (l, r) else (r, l)
       val built = aggregateHistograms(cache, globalGrads, cuts, obj,
-        softmax, grp, iter, Array(small), nodesShape(nodes), droppedShapes)(0)
+        softmax, grp, iter, Array(small), nodesShape(nodes), droppedShapes).hist(0)
       hists(small) = built
       val ph = hists(nid)
       val sib = new Array[Double](ph.length)
@@ -1035,8 +1045,7 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
       while (i < ph.length) { sib(i) = ph(i) - built(i); i += 1 }
       hists(large) = sib
       hists.remove(nid) // expanded nodes never need their histogram again
-      tryEnqueue(l)
-      tryEnqueue(r)
+      tryEnqueue(Array(l, r))
     }
     nodes.foreach { n =>
       // every node (internal too) gets its would-be leaf weight so the
@@ -1056,50 +1065,53 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
       iter: Int, colSampler: ColumnSampler,
       droppedShapes: Array[(TreeShape, Double, Int)]): TreeShape = {
 
-    val sc = cache.sparkContext
     val nodes = new ArrayBuffer[BuildNode]
     val treeCols = colSampler.sampleTree(iter, params.colsampleBytree)
 
-    // root totals
-    val (rootG, rootH) = aggregateTotals(cache, globalGrads, obj, softmax, grp, iter, droppedShapes)
-    nodes += new BuildNode(rootG, rootH, 0)
+    // the root's histogram pass also sums its (G, H) totals
+    nodes += new BuildNode(0.0, 0.0, 0)
     if (params.interactionConstraints.nonEmpty)
       nodes(0).allowed = Some((0 until numFeatures).toSet)
+    val root = aggregateHistograms(cache, globalGrads, cuts, obj, softmax, grp,
+      iter, Array(0), nodesShape(nodes), droppedShapes)
+    nodes(0).g = root.totals(0); nodes(0).h = root.totals(1)
 
     var frontier = Array(0)
-    var parentHists = Map.empty[Int, Array[Double]] // node id → hist of that node
+    var hists = Map(0 -> root.hist(0)) // frontier node id → hist of that node
     var depth = 0
     var leaves = 1
 
     while (frontier.nonEmpty && depth < params.maxDepth &&
         (params.maxLeaves == 0 || leaves < params.maxLeaves)) {
 
-      // subtraction trick (histogram.h:203-213,386-425): build smaller sibling
-      val (buildSet, subtractSet) = planHistBuilds(frontier, parentHists, nodes)
-      val built = aggregateHistograms(cache, globalGrads, cuts, obj, softmax, grp,
-        iter, buildSet, nodesShape(nodes), droppedShapes)
-      val hists = collection.mutable.Map[Int, Array[Double]](buildSet.zip(built).toSeq: _*)
-      subtractSet.foreach { case (nid, parent, sibling) =>
-        val ph = parentHists(parent)
-        val sh = hists(sibling)
-        val out = new Array[Double](ph.length)
-        var i = 0
-        while (i < ph.length) { out(i) = ph(i) - sh(i); i += 1 }
-        hists(nid) = out
+      if (depth > 0) {
+        // subtraction trick (histogram.h:203-213,386-425): build smaller sibling
+        val (buildSet, subtractSet) = planHistBuilds(frontier, hists, nodes)
+        val built = aggregateHistograms(cache, globalGrads, cuts, obj, softmax, grp,
+          iter, buildSet, nodesShape(nodes), droppedShapes)
+        val level = collection.mutable.Map[Int, Array[Double]](
+          buildSet.indices.map(s => buildSet(s) -> built.hist(s)): _*)
+        subtractSet.foreach { case (nid, parent, sibling) =>
+          val ph = hists(parent)
+          val sh = level(sibling)
+          val out = new Array[Double](ph.length)
+          var i = 0
+          while (i < ph.length) { out(i) = ph(i) - sh(i); i += 1 }
+          level(nid) = out
+        }
+        hists = level.toMap
       }
 
       val levelCols = colSampler.sampleLevel(treeCols, iter, depth, params.colsampleBylevel)
+      val found = SplitEnumerator.bestSplits(frontier.map { nid =>
+        nodeSearch(hists(nid), nodes(nid),
+          colSampler.sampleNode(levelCols, iter, depth, nid, params.colsampleBynode))
+      }, cuts, params)
       val nextFrontier = new ArrayBuffer[Int]
-      frontier.foreach { nid =>
+      frontier.indices.foreach { i =>
+        val nid = frontier(i)
         val n = nodes(nid)
-        val nodeCols0 = colSampler.sampleNode(levelCols, iter, depth, nid, params.colsampleBynode)
-        val nodeCols = n.allowed match {
-          case Some(a) => nodeCols0.filter(a.contains)
-          case None => nodeCols0
-        }
-        val cand = SplitEnumerator.bestSplit(hists(nid), cuts, nodeCols, n.g, n.h,
-          params, n.lowerBound, n.upperBound)
-        cand match {
+        found(i) match {
           case Some(c) if c.gain > 0 &&
               (params.maxLeaves == 0 || leaves + 1 <= math.max(params.maxLeaves, 2)) =>
             applySplit(nodes, nid, c)
@@ -1110,7 +1122,6 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
             n.weight = SplitEnumerator.calcWeight(n.g, n.h, params, n.lowerBound, n.upperBound)
         }
       }
-      parentHists = hists.toMap
       frontier = nextFrontier.toArray
       depth += 1
     }
@@ -1121,6 +1132,12 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
     }
     nodesShape(nodes)
   }
+
+  /** Split-search input for node `n`: its sampled columns narrowed to its
+    * interaction-constraint set. */
+  private def nodeSearch(hist: Array[Double], n: BuildNode, cols: Array[Int]): NodeSearch =
+    NodeSearch(hist, n.allowed.fold(cols)(a => cols.filter(a.contains)), n.g, n.h,
+      n.lowerBound, n.upperBound)
 
   private def applySplit(nodes: ArrayBuffer[BuildNode], nid: Int, c: SplitCandidate): Unit = {
     val n = nodes(nid)
@@ -1150,12 +1167,11 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
 
   /** Decide which child of each split pair gets a fresh histogram build
     * (smaller sumHess) vs parent-subtraction (ref BuildHistLeftRight,
-    * histogram.h:386-425). Root or nodes whose parent hist is unavailable
-    * are built directly. Returns (buildSet, subtract = (nid, parent, sibling)). */
+    * histogram.h:386-425). Nodes whose parent hist is unavailable are
+    * built directly. Returns (buildSet, subtract = (nid, parent, sibling)). */
   private def planHistBuilds(
       frontier: Array[Int], parentHists: Map[Int, Array[Double]],
       nodes: ArrayBuffer[BuildNode]): (Array[Int], Array[(Int, Int, Int)]) = {
-    if (frontier.sameElements(Array(0))) return (Array(0), Array.empty)
     val build = new ArrayBuffer[Int]
     val subtract = new ArrayBuffer[(Int, Int, Int)]
     // frontier children come in (left, right) consecutive pairs per parent
@@ -1560,41 +1576,23 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
     }
   }
 
-  private def aggregateTotals(
-      cache: RDD[(BInst, Array[Double])],
-      globalGrads: Option[RDD[Array[Double]]], obj: Objective,
-      softmax: SoftmaxObjective, grp: Int, iter: Int,
-      dropped: Array[(TreeShape, Double, Int)]): (Double, Double) = {
-    withGrads(cache, globalGrads).mapPartitions { it =>
-      val out = new Array[Double](2)
-      val scratch = new Array[Double](2 * numGroups)
-      var g = 0.0; var h = 0.0
-      it.foreach { case (r, m, pre) =>
-        if (gradBased) {
-          gradOf(r, m, pre, obj, softmax, grp, dropped, out, scratch)
-          val s = gradientSampleScale(r.rowId, iter, out(0), out(1))
-          if (s > 0) { g += s * out(0); h += s * out(1) }
-        } else if (sampled(r.rowId, iter)) {
-          gradOf(r, m, pre, obj, softmax, grp, dropped, out, scratch)
-          g += out(0); h += out(1)
-        }
-      }
-      Iterator.single((g, h))
-    }.treeReduce((a, b) => (a._1 + b._1, a._2 + b._2), depth = graft.Agg.depth(cache.getNumPartitions))
-  }
-
   /** ONE pass building histograms for every node in `buildSet` — the analog
     * of `HistogramBuilder::BuildHist` + allreduce (`histogram.h:44-202`):
-    * per-partition dense accumulation (allocation-free inner loop), then a
-    * tree-wise partial+final merge — Spark's map-side combine IS the
-    * reference's histogram allreduce. Hist layout per node: g at 2·bin,
-    * h at 2·bin+1 in global bin space. */
+    * per-partition dense accumulation (allocation-free inner loop) that
+    * also sums each node's (G, H) totals (the root's totals come from
+    * here). Each task ships its partials as one packed [[NodePartials]]
+    * block; the driver sums the blocks in partition-index order, so the
+    * result does not depend on which task finished first. Above
+    * `Agg.directCutoff` partitions the blocks merge through `Agg`'s
+    * two-level tree instead, to cap driver fan-in. Hist layout per node:
+    * g at 2·bin, h at 2·bin+1 in global bin space; a node no sampled row
+    * reached gets zeros. */
   private def aggregateHistograms(
       cache: RDD[(BInst, Array[Double])],
       globalGrads: Option[RDD[Array[Double]]], cuts: HistogramCuts,
       obj: Objective, softmax: SoftmaxObjective, grp: Int, iter: Int,
       buildSet: Array[Int], shape: TreeShape,
-      dropped: Array[(TreeShape, Double, Int)]): Array[Array[Double]] = {
+      dropped: Array[(TreeShape, Double, Int)]): NodePartials = {
 
     val sc = cache.sparkContext
     val bShape = sc.broadcast(shape)
@@ -1608,7 +1606,8 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
     buildSet.zipWithIndex.foreach { case (nid, s) => slotOf(nid) = s }
 
     val partials = withGrads(cache, globalGrads).mapPartitions { it =>
-      val hists = new Array[Array[Double]](nBuild)
+      val acc = new NodePartials(nBuild, histLen)
+      val tot = acc.totals
       val out = new Array[Double](2)
       val scratch = new Array[Double](2 * numGroups)
       val sh = bShape.value
@@ -1617,13 +1616,13 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
           val pos = sh.position(r)
           val slot = if (pos <= maxNid) slotOf(pos) else -1
           if (slot >= 0) {
-            var hist = hists(slot)
-            if (hist == null) { hist = new Array[Double](histLen); hists(slot) = hist }
             gradOf(r, m, pre, obj, softmax, grp, dropped, out, scratch)
             val sampleScale =
               if (gradBased) gradientSampleScale(r.rowId, iter, out(0), out(1)) else 1.0
             val g = sampleScale * out(0); val h = sampleScale * out(1)
             if (sampleScale > 0) {
+            val hist = acc.hist(slot)
+            tot(2 * slot) += g; tot(2 * slot + 1) += h
             if (r.idx == null) {
               var f = 0
               while (f < numFeatures) {
@@ -1654,23 +1653,15 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
           }
         }
       }
-      Iterator.single(hists)
+      Iterator.single(acc.pack())
     }
-    val result = graft.Agg.reduce(partials)((a, b) => {
-      var s = 0
-      while (s < nBuild) {
-        if (a(s) == null) a(s) = b(s)
-        else if (b(s) != null) {
-          val x = a(s); val y = b(s)
-          var i = 0
-          while (i < histLen) { x(i) += y(i); i += 1 }
-        }
-        s += 1
-      }
-      a
-    })
+    val merged = new NodePartials(nBuild, histLen)
+    if (partials.getNumPartitions <= graft.Agg.directCutoff)
+      sc.runJob(partials, (it: Iterator[Array[Byte]]) => it.next()).foreach(merged.add)
+    else merged.add(graft.Agg.reduce(partials)((a, b) =>
+      new NodePartials(nBuild, histLen).add(a).add(b).pack()))
     bShape.destroy()
-    result.map(h => if (h == null) new Array[Double](histLen) else h)
+    merged
   }
 }
 
