@@ -62,15 +62,21 @@ final case class HistogramCuts(cuts: Array[Array[Double]]) extends Serializable 
 object Binning {
 
   /** Distributed weighted-quantile cut finding — the reference's
-    * `SketchOnDMatrix` (`src/common/hist_util.cc:53-81`): per-partition
-    * sketches, merged tree-wise (Spark's `treeAggregate` partial+final merge
-    * IS the reference's sketch allreduce, `quantile.h:940`).
+    * `SketchOnDMatrix` (`src/common/hist_util.cc:53-81`) and its sketch
+    * allreduce (`quantile.h:940`): one job, each task sketching its
+    * partition and finishing the per-feature summaries, which it ships as
+    * one [[WQSummary.pack]]ed block. The driver merges the blocks feature
+    * by feature in partition-index order (features spread over the
+    * driver's cores), so the cuts do not depend on which task finished
+    * first: two calls over the same partitions give the same cuts. Above
+    * `Agg.directCutoff` partitions the blocks merge pairwise on the
+    * executors first, in Spark's order, to cap the driver's fan-in.
     *
     * `weights` defaults to 1; pass hessians for the approx method's
     * hessian-weighted re-sketch (`src/tree/updater_approx.cc:46-53`).
     *
-    * The unified column count is discovered IN the same pass: the sketch
-    * accumulator grows to the longest row seen, so ragged inputs get the
+    * The unified column count is discovered IN the same pass: a task's
+    * sketches grow to the longest row it sees, so ragged inputs get the
     * reference's `MetaInfo::SynchronizeNumberOfColumns` semantics
     * (`include/xgboost/data.h:191` — num_col = global max, short rows pad
     * as missing) with no extra scan. `minFeatures` is a lower bound on the
@@ -79,67 +85,90 @@ object Binning {
   def findCuts(
       data: RDD[(Array[Double], Double)], // (features, weight)
       minFeatures: Int,
-      maxBin: Int): HistogramCuts = {
-    val budget = QuantileSketch.sizeFor(maxBin)
-    def grow(acc: Array[QuantileSketch], n: Int): Array[QuantileSketch] =
-      if (acc.length >= n) acc
-      else {
-        val out = java.util.Arrays.copyOf(acc, n)
-        var i = acc.length
-        while (i < n) { out(i) = new QuantileSketch(budget); i += 1 }
-        out
-      }
-    val zero = Array.fill(minFeatures)(new QuantileSketch(budget))
-    val sketches = graft.Agg.aggregate(data)(zero)(
-      seqOp = (acc0, row) => {
-        val (fs, w) = row
-        val acc = grow(acc0, fs.length)
-        var f = 0
-        while (f < fs.length) { acc(f).push(fs(f), w); f += 1 }
-        acc
-      },
-      combOp = (a0, b) => {
-        val a = grow(a0, b.length)
-        var f = 0
-        while (f < b.length) { a(f).merge(b(f)); f += 1 }
-        a
-      })
-    HistogramCuts(sketches.map(s => cutsFromSummary(s.result, maxBin)))
-  }
+      maxBin: Int): HistogramCuts =
+    mergeCuts(data.mapPartitions(new SketchDense(QuantileSketch.sizeFor(maxBin))),
+      minFeatures, maxBin)
 
   /** Sparse-input cut finding: only PRESENT (idx, value) entries are pushed
     * — identical to the dense path's NaN-skip, so a sparse encoding of the
     * same data yields the same cuts (ref sparse sketching over CSR,
-    * `src/common/hist_util.cc:53-81`). */
+    * `src/common/hist_util.cc:53-81`). Merged like [[findCuts]]. */
   def findCutsSparse(
       data: RDD[(Array[Int], Array[Double], Double)], // (indices, values, weight)
       minFeatures: Int,
-      maxBin: Int): HistogramCuts = {
-    val budget = QuantileSketch.sizeFor(maxBin)
-    def grow(acc: Array[QuantileSketch], n: Int): Array[QuantileSketch] =
-      if (acc.length >= n) acc
-      else {
-        val out = java.util.Arrays.copyOf(acc, n)
-        var i = acc.length
-        while (i < n) { out(i) = new QuantileSketch(budget); i += 1 }
-        out
+      maxBin: Int): HistogramCuts =
+    mergeCuts(data.mapPartitions(new SketchSparse(QuantileSketch.sizeFor(maxBin))),
+      minFeatures, maxBin)
+
+  /** One task's per-feature sketches, grown to `n` features. */
+  private def grow(acc: Array[QuantileSketch], n: Int, budget: Int): Array[QuantileSketch] =
+    if (acc.length >= n) acc
+    else {
+      val out = java.util.Arrays.copyOf(acc, n)
+      var i = acc.length
+      while (i < n) { out(i) = new QuantileSketch(budget); i += 1 }
+      out
+    }
+
+  private final class SketchDense(budget: Int)
+      extends (Iterator[(Array[Double], Double)] => Iterator[Array[Byte]]) with Serializable {
+    def apply(it: Iterator[(Array[Double], Double)]): Iterator[Array[Byte]] = {
+      var acc = new Array[QuantileSketch](0)
+      it.foreach { case (fs, w) =>
+        acc = grow(acc, fs.length, budget)
+        var f = 0
+        while (f < fs.length) { acc(f).push(fs(f), w); f += 1 }
       }
-    val zero = Array.fill(minFeatures)(new QuantileSketch(budget))
-    val sketches = graft.Agg.aggregate(data)(zero)(
-      seqOp = (acc0, row) => {
-        val (idx, vs, w) = row
-        val acc = if (idx.length == 0) acc0 else grow(acc0, idx(idx.length - 1) + 1)
+      Iterator.single(WQSummary.pack(acc.map(_.result)))
+    }
+  }
+
+  private final class SketchSparse(budget: Int)
+      extends (Iterator[(Array[Int], Array[Double], Double)] => Iterator[Array[Byte]])
+      with Serializable {
+    def apply(it: Iterator[(Array[Int], Array[Double], Double)]): Iterator[Array[Byte]] = {
+      var acc = new Array[QuantileSketch](0)
+      it.foreach { case (idx, vs, w) =>
+        if (idx.length > 0) acc = grow(acc, idx(idx.length - 1) + 1, budget)
         var k = 0
         while (k < idx.length) { acc(idx(k)).push(vs(k), w); k += 1 }
-        acc
-      },
-      combOp = (a0, b) => {
-        val a = grow(a0, b.length)
-        var f = 0
-        while (f < b.length) { a(f).merge(b(f)); f += 1 }
-        a
-      })
-    HistogramCuts(sketches.map(s => cutsFromSummary(s.result, maxBin)))
+      }
+      Iterator.single(WQSummary.pack(acc.map(_.result)))
+    }
+  }
+
+  /** Cuts from the tasks' packed summaries (one block per partition),
+    * folded in partition-index order as they reach the driver: each
+    * block's summaries merge into the running per-feature summaries, one
+    * feature per driver core at a time. Above `Agg.directCutoff`
+    * partitions the blocks first merge pairwise on the executors
+    * ([[MergeBlocks]]), so the driver's fan-in stays near √P blocks. */
+  private def mergeCuts(blocks: RDD[Array[Byte]], minFeatures: Int, maxBin: Int): HistogramCuts = {
+    val budget = QuantileSketch.sizeFor(maxBin)
+    val merged = graft.Agg.foldPartials(blocks, new MergeBlocks(budget))(
+      Array.fill(minFeatures)(WQSummary.empty))(
+      (acc, block) => mergeSummaries(acc, WQSummary.unpack(block), budget, parallel = true))
+    HistogramCuts(merged.map(cutsFromSummary(_, maxBin)))
+  }
+
+  /** Two packed blocks of per-feature summaries merged into one. */
+  private final class MergeBlocks(budget: Int)
+      extends ((Array[Byte], Array[Byte]) => Array[Byte]) with Serializable {
+    def apply(a: Array[Byte], b: Array[Byte]): Array[Byte] = WQSummary.pack(
+      mergeSummaries(WQSummary.unpack(a), WQSummary.unpack(b), budget, parallel = false))
+  }
+
+  /** Per feature, `acc`'s summary merged with `part`'s and pruned to
+    * `budget`; a feature one side lacks merges with the empty summary.
+    * With `parallel`, features are spread over the driver's cores. */
+  private def mergeSummaries(acc: Array[WQSummary], part: Array[WQSummary], budget: Int,
+      parallel: Boolean): Array[WQSummary] = {
+    val out = new Array[WQSummary](math.max(acc.length, part.length))
+    def at(s: Array[WQSummary], f: Int) = if (f < s.length) s(f) else WQSummary.empty
+    val features = java.util.stream.IntStream.range(0, out.length)
+    (if (parallel) features.parallel() else features)
+      .forEach(f => out(f) = at(acc, f).merge(at(part, f)).prune(budget))
+    out
   }
 
   /** Exact-method cuts: EVERY distinct feature value becomes its own bin

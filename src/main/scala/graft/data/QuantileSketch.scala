@@ -1,5 +1,6 @@
 package graft.data
 
+import java.nio.{ByteBuffer, ByteOrder}
 
 /** Mergeable weighted quantile summary — the GK-style summary of the
   * reference's `WQSummary` (`src/common/quantile.h:35-530`) and of the
@@ -12,9 +13,10 @@ package graft.data
   * Invariants: rmin non-decreasing, rmax non-decreasing, rmin+wmin <= rmax.
   *
   * `merge` is the reference's `SetCombine`; `prune` is `SetPrune`
-  * (`quantile.h:225`): both preserve the eps rank-error bound, so the
-  * summary is a proper commutative-monoid aggregation buffer — safe under
-  * Spark's arbitrary partial-agg merge order (SURVEY §7.4 risk 1).
+  * (`quantile.h:225`): both preserve the eps rank-error bound under any
+  * merge order (SURVEY §7.4 risk 1). The bound holds for every order, but
+  * the pruned entries do not: `Binning.findCuts` merges partition
+  * summaries in partition-index order, so its cuts are reproducible.
   */
 final class WQSummary(
     val values: Array[Double],
@@ -135,6 +137,79 @@ final class WQSummary(
 object WQSummary {
   val empty = new WQSummary(Array.empty, Array.empty, Array.empty, Array.empty)
 
+  /** Packs summaries into one little-endian block: the count, one header
+    * per summary (`size << 1 | pruned`), then each summary's arrays. An
+    * exact summary (its rmin/rmax are the running sums of its wmins, as
+    * [[fromSorted]] builds them) ships values and wmins only; any other
+    * ships all four arrays. [[unpack]] gives back bit-identical summaries. */
+  def pack(ss: Array[WQSummary]): Array[Byte] = {
+    val pruned = ss.map(s => !isExact(s))
+    var doubles = 0L
+    var i = 0
+    while (i < ss.length) { doubles += ss(i).size.toLong * (if (pruned(i)) 4 else 2); i += 1 }
+    val buf = ByteBuffer.allocate(Math.toIntExact(4L * (1 + ss.length) + 8L * doubles))
+      .order(ByteOrder.LITTLE_ENDIAN)
+    buf.putInt(ss.length)
+    i = 0
+    while (i < ss.length) { buf.putInt(ss(i).size << 1 | (if (pruned(i)) 1 else 0)); i += 1 }
+    val out = buf.asDoubleBuffer()
+    i = 0
+    while (i < ss.length) {
+      val s = ss(i)
+      out.put(s.values).put(s.wmins)
+      if (pruned(i)) out.put(s.rmins).put(s.rmaxs)
+      i += 1
+    }
+    buf.array()
+  }
+
+  /** The summaries of a [[pack]]ed block. */
+  def unpack(block: Array[Byte]): Array[WQSummary] = {
+    val buf = ByteBuffer.wrap(block).order(ByteOrder.LITTLE_ENDIAN)
+    val headers = Array.fill(buf.getInt())(buf.getInt())
+    val in = buf.asDoubleBuffer()
+    headers.map { h =>
+      val n = h >>> 1
+      val v = new Array[Double](n)
+      val wmin = new Array[Double](n)
+      in.get(v).get(wmin)
+      if ((h & 1) == 0) withRanks(v, wmin)
+      else {
+        val rmin = new Array[Double](n)
+        val rmax = new Array[Double](n)
+        in.get(rmin).get(rmax)
+        new WQSummary(v, rmin, rmax, wmin)
+      }
+    }
+  }
+
+  /** Whether `s`'s ranks are bit for bit the running sums [[withRanks]]
+    * would rebuild. */
+  private def isExact(s: WQSummary): Boolean = {
+    var acc = 0.0
+    var i = 0
+    while (i < s.size) {
+      if (bits(s.rmins(i)) != bits(acc)) return false
+      acc += s.wmins(i)
+      if (bits(s.rmaxs(i)) != bits(acc)) return false
+      i += 1
+    }
+    true
+  }
+
+  @inline private def bits(d: Double): Long = java.lang.Double.doubleToRawLongBits(d)
+
+  /** The exact summary of distinct ascending `v` with weights `wmin`:
+    * rmin/rmax are the running weight sums below and through each value. */
+  private def withRanks(v: Array[Double], wmin: Array[Double]): WQSummary = {
+    val rmin = new Array[Double](v.length)
+    val rmax = new Array[Double](v.length)
+    var acc = 0.0
+    var i = 0
+    while (i < v.length) { rmin(i) = acc; acc += wmin(i); rmax(i) = acc; i += 1 }
+    new WQSummary(v, rmin, rmax, wmin)
+  }
+
   /** Exact summary from raw (value, weight) pairs (test surface). */
   def fromSorted(pairs: Array[(Double, Double)]): WQSummary =
     fromSorted(pairs.map(_._1), pairs.map(_._2), pairs.length)
@@ -151,13 +226,7 @@ object WQSummary {
       else { v(len) = vals(i); wmin(len) = ws(i); len += 1 }
       i += 1
     }
-    val rmin = new Array[Double](len)
-    val rmax = new Array[Double](len)
-    var acc = 0.0
-    i = 0
-    while (i < len) { rmin(i) = acc; acc += wmin(i); rmax(i) = acc; i += 1 }
-    new WQSummary(java.util.Arrays.copyOf(v, len), rmin, rmax,
-      java.util.Arrays.copyOf(wmin, len))
+    withRanks(java.util.Arrays.copyOf(v, len), java.util.Arrays.copyOf(wmin, len))
   }
 }
 

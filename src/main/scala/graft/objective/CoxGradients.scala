@@ -1,5 +1,7 @@
 package graft.objective
 
+import org.apache.spark.TaskContext
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import graft.tree.BInst
 
@@ -51,43 +53,13 @@ object CoxGradients {
     * `adjustedMargin` does for the histogram passes. */
   def compute(rows: RDD[(BInst, Array[Double])],
       pending: Array[(graft.tree.TreeShape, Double, Int)] = Array.empty): RDD[Array[Double]] = {
-    val zipped =
-      if (pending.isEmpty) rows
-      else rows.map { case (r, m) =>
-        var out = m(0)
-        var i = 0
-        while (i < pending.length) {
-          out += pending(i)._2 * pending(i)._1.predictLeaf(r)(0)
-          i += 1
-        }
-        (r, Array(out))
-      }
+    val zipped = if (pending.isEmpty) rows else rows.map(new WithPending(pending))
     val sc = rows.sparkContext
     val nParts = zipped.getNumPartitions
 
-    // ---- pass 1: per-partition boundary summaries ----
-    val stats = new Array[PartStats](nParts)
-    zipped.mapPartitionsWithIndex { (pid, it) =>
-      var started = false; var inFirst = true
-      var total = 0.0
-      var firstVal = 0.0; var firstExp = 0.0; var firstEvents = 0L
-      var curVal = 0.0; var curExp = 0.0; var curEvents = 0L
-      it.foreach { case (r, m) =>
-        val v = math.abs(r.label); val e = math.exp(m(0))
-        if (!started) { started = true; curVal = v }
-        else if (v != curVal) {
-          if (inFirst) { firstVal = curVal; firstExp = curExp; firstEvents = curEvents; inFirst = false }
-          curVal = v; curExp = 0.0; curEvents = 0L
-        }
-        total += e; curExp += e; if (r.label > 0) curEvents += 1
-      }
-      val st =
-        if (!started) PartStats(nonEmpty = false, 0, 0, 0, 0, 0, 0, 0)
-        else if (inFirst) // single tie group spans the whole partition
-          PartStats(nonEmpty = true, total, curVal, curExp, curEvents, curVal, curExp, curEvents)
-        else PartStats(nonEmpty = true, total, firstVal, firstExp, firstEvents, curVal, curExp, curEvents)
-      Iterator.single((pid, st))
-    }.collect().foreach { case (pid, st) => stats(pid) = st }
+    // ---- pass 1: per-partition boundary summaries (one job per pass, the
+    // results in partition order) ----
+    val stats = graft.Agg.runJob(zipped, BoundaryStats)
 
     // driver: suffix exp sums + cross-partition tie stitching
     val suffixExp = new Array[Double](nParts)
@@ -133,18 +105,7 @@ object CoxGradients {
       stats(p).total, suffixExp(p), tieExpBefore(p), tieEventsBefore(p),
       tieEventsAfter(p), ownsFirst(p), 0.0, 0.0))
     val bPre = sc.broadcast(preInfo)
-    val owned = new Array[(Double, Double)](nParts)
-    zipped.mapPartitionsWithIndex { (pid, it) =>
-      val info = bPre.value(pid)
-      var r = 0.0; var s = 0.0
-      scanGroups(it, info) { (riskSum, nEventsGlobal, ownedGroup, _, _) =>
-        if (ownedGroup && nEventsGlobal > 0) {
-          r += nEventsGlobal / riskSum
-          s += nEventsGlobal / (riskSum * riskSum)
-        }
-      }
-      Iterator.single((pid, (r, s)))
-    }.collect().foreach { case (pid, rs) => owned(pid) = rs }
+    val owned = graft.Agg.runJob(zipped, new OwnedSums(bPre))
 
     val info = new Array[PartInfo](nParts)
     var rAcc = 0.0; var sAcc = 0.0
@@ -155,7 +116,60 @@ object CoxGradients {
     val bInfo = sc.broadcast(info)
 
     // ---- pass 3: per-row gradients, one tie group buffered at a time ----
-    zipped.mapPartitionsWithIndex { (pid, it) =>
+    zipped.mapPartitionsWithIndex(new RowGradients(bInfo))
+  }
+
+  /** The cached margin with the pending trees added ([[graft.tree.TreeShape.margin]]). */
+  private final class WithPending(pending: Array[(graft.tree.TreeShape, Double, Int)])
+      extends (((BInst, Array[Double])) => (BInst, Array[Double])) with Serializable {
+    def apply(rm: (BInst, Array[Double])): (BInst, Array[Double]) =
+      (rm._1, Array(graft.tree.TreeShape.margin(rm._1, rm._2, pending, 0)))
+  }
+
+  /** Pass 1: one partition's exp total and first/last tie-group summaries. */
+  private object BoundaryStats extends graft.Agg.PartitionFn[(BInst, Array[Double]), PartStats] {
+    def apply(ctx: TaskContext, it: Iterator[(BInst, Array[Double])]): PartStats = {
+      var started = false; var inFirst = true
+      var total = 0.0
+      var firstVal = 0.0; var firstExp = 0.0; var firstEvents = 0L
+      var curVal = 0.0; var curExp = 0.0; var curEvents = 0L
+      it.foreach { case (r, m) =>
+        val v = math.abs(r.label); val e = math.exp(m(0))
+        if (!started) { started = true; curVal = v }
+        else if (v != curVal) {
+          if (inFirst) { firstVal = curVal; firstExp = curExp; firstEvents = curEvents; inFirst = false }
+          curVal = v; curExp = 0.0; curEvents = 0L
+        }
+        total += e; curExp += e; if (r.label > 0) curEvents += 1
+      }
+      if (!started) PartStats(nonEmpty = false, 0, 0, 0, 0, 0, 0, 0)
+      else if (inFirst) // single tie group spans the whole partition
+        PartStats(nonEmpty = true, total, curVal, curExp, curEvents, curVal, curExp, curEvents)
+      else PartStats(nonEmpty = true, total, firstVal, firstExp, firstEvents, curVal, curExp, curEvents)
+    }
+  }
+
+  /** Pass 2: one partition's owned R/S contributions. */
+  private final class OwnedSums(bPre: Broadcast[Array[PartInfo]])
+      extends graft.Agg.PartitionFn[(BInst, Array[Double]), (Double, Double)] {
+    def apply(ctx: TaskContext, it: Iterator[(BInst, Array[Double])]): (Double, Double) = {
+      val info = bPre.value(ctx.partitionId())
+      var r = 0.0; var s = 0.0
+      scanGroups(it, info) { (riskSum, nEventsGlobal, ownedGroup, _, _) =>
+        if (ownedGroup && nEventsGlobal > 0) {
+          r += nEventsGlobal / riskSum
+          s += nEventsGlobal / (riskSum * riskSum)
+        }
+      }
+      (r, s)
+    }
+  }
+
+  /** Pass 3: one partition's per-row (g, h), one tie group buffered at a
+    * time. */
+  private final class RowGradients(bInfo: Broadcast[Array[PartInfo]])
+      extends ((Int, Iterator[(BInst, Array[Double])]) => Iterator[Array[Double]]) with Serializable {
+    def apply(pid: Int, it: Iterator[(BInst, Array[Double])]): Iterator[Array[Double]] = {
       val inf = bInfo.value(pid)
       var bigR = inf.rOffset; var bigS = inf.sOffset
       val flat = new ArrayBuffer[Array[Double]]

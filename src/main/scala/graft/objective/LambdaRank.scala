@@ -1,7 +1,7 @@
 package graft.objective
 
 import org.apache.spark.rdd.RDD
-import graft.tree.BInst
+import graft.tree.{BInst, TreeShape}
 
 import scala.collection.mutable.ArrayBuffer
 
@@ -75,20 +75,21 @@ object LambdaRankGradients {
     * Hot path: one full pass per boosting iteration, so the group gather
     * uses primitive double builders (no per-row tuple boxing) and groups
     * stream through lazily — the partition never holds more than one
-    * group's inputs plus its emitted gradient rows. */
+    * group's inputs plus its emitted gradient rows. The per-partition
+    * function is a named class, so building the RDD each round costs no
+    * closure-cleaning pass (see [[graft.Agg]]). */
   def compute(rows: RDD[(BInst, Array[Double])],
       obj: LambdaRankObjective,
-      pending: Array[(graft.tree.TreeShape, Double, Int)] = Array.empty,
+      pending: Array[(TreeShape, Double, Int)] = Array.empty,
       tPlus: Array[Double] = null, tMinus: Array[Double] = null,
-      weightNorm: Double = 1.0): RDD[Array[Double]] = {
-    val variant = obj.variant
-    val expGain = obj.ndcgExpGain
-    val topK = obj.topK
-    val pairMethod = obj.pairMethod
-    val numPair = obj.numPair
-    val norm = obj.normalization
-    val scoreNorm = obj.scoreNormalization
-    withPending(rows, pending).mapPartitions { it =>
+      weightNorm: Double = 1.0): RDD[Array[Double]] =
+    rows.mapPartitions(new GroupGradients(obj, pending, tPlus, tMinus, weightNorm))
+
+  private final class GroupGradients(obj: LambdaRankObjective,
+      pending: Array[(TreeShape, Double, Int)],
+      tPlus: Array[Double], tMinus: Array[Double], weightNorm: Double)
+      extends (Iterator[(BInst, Array[Double])] => Iterator[Array[Double]]) with Serializable {
+    def apply(it: Iterator[(BInst, Array[Double])]): Iterator[Array[Double]] = {
       val base = it.buffered
       new Iterator[Array[Array[Double]]] {
         private val lb = new ArrayBuffer[Double]
@@ -100,30 +101,15 @@ object LambdaRankGradients {
           val q = base.head._1.qid
           while (base.hasNext && base.head._1.qid == q) {
             val (r, m) = base.next()
-            lb += r.label; mb += m(0); wb += r.weight
+            lb += r.label; mb += TreeShape.margin(r, m, pending, 0); wb += r.weight
           }
           groupGradients(lb.toArray, mb.toArray, wb.toArray,
-            variant, expGain, topK, pairMethod, numPair, q, tPlus, tMinus, null, null,
-            norm, scoreNorm, weightNorm)
+            obj.variant, obj.ndcgExpGain, obj.topK, obj.pairMethod, obj.numPair, q,
+            tPlus, tMinus, null, null, obj.normalization, obj.scoreNormalization, weightNorm)
         }
       }.flatten
     }
   }
-
-  /** Deferred-cache trees: add their contribution to the cached margin on
-    * the fly (see CoxGradients.compute). */
-  private def withPending(rows: RDD[(BInst, Array[Double])],
-      pending: Array[(graft.tree.TreeShape, Double, Int)]): RDD[(BInst, Array[Double])] =
-    if (pending.isEmpty) rows
-    else rows.map { case (r, m) =>
-      var out = m(0)
-      var i = 0
-      while (i < pending.length) {
-        out += pending(i)._2 * pending(i)._1.predictLeaf(r)(0)
-        i += 1
-      }
-      (r, Array(out))
-    }
 
   /** Position-bias numerator pass for Unbiased LambdaMART (ref
     * `lambdarank_obj.cc:205-220` accumulation + `:40-88`
@@ -132,23 +118,28 @@ object LambdaRankGradients {
     * enumerate identical pairs) and sums, per displayed position,
     * li = Σ cost/t⁻(low) and lj = Σ cost/t⁺(high) with
     * cost = ln(1/(1−σ(s_hi−s_lo)))·|Δmetric| — eq. 30/31 of Hu et al.,
-    * "Unbiased LambdaMART". One treeAggregate per boosted iteration; the
-    * driver receives 2·maxPositions doubles, independent of data size. */
+    * "Unbiased LambdaMART". One job per boosted iteration, summed in
+    * partition order; the driver receives 2·maxPositions doubles per
+    * partition, independent of data size. */
   def positionBias(rows: RDD[(BInst, Array[Double])],
-      obj: LambdaRankObjective, pending: Array[(graft.tree.TreeShape, Double, Int)],
-      tPlus: Array[Double], tMinus: Array[Double]): (Array[Double], Array[Double]) = {
-    val variant = obj.variant
-    val expGain = obj.ndcgExpGain
-    val topK = obj.topK
-    val pairMethod = obj.pairMethod
-    val numPair = obj.numPair
-    val norm = obj.normalization
-    val scoreNorm = obj.scoreNormalization
-    val k = tPlus.length
-    withPending(rows, pending).mapPartitions { it =>
+      obj: LambdaRankObjective, pending: Array[(TreeShape, Double, Int)],
+      tPlus: Array[Double], tMinus: Array[Double]): (Array[Double], Array[Double]) =
+    graft.Agg.reduce(rows.mapPartitions(new PositionBias(obj, pending, tPlus, tMinus))) {
+      case ((a1, a2), (b1, b2)) =>
+        var i = 0
+        while (i < a1.length) { a1(i) += b1(i); a2(i) += b2(i); i += 1 }
+        (a1, a2)
+    }
+
+  /** One partition's (li, lj) position-bias numerators for [[positionBias]]. */
+  private final class PositionBias(obj: LambdaRankObjective,
+      pending: Array[(TreeShape, Double, Int)], tPlus: Array[Double], tMinus: Array[Double])
+      extends (Iterator[(BInst, Array[Double])] => Iterator[(Array[Double], Array[Double])])
+      with Serializable {
+    def apply(it: Iterator[(BInst, Array[Double])]): Iterator[(Array[Double], Array[Double])] = {
       val base = it.buffered
-      val li = new Array[Double](k)
-      val lj = new Array[Double](k)
+      val li = new Array[Double](tPlus.length)
+      val lj = new Array[Double](tPlus.length)
       val lb = new ArrayBuffer[Double]
       val mb = new ArrayBuffer[Double]
       val wb = new ArrayBuffer[Double]
@@ -157,18 +148,15 @@ object LambdaRankGradients {
         val q = base.head._1.qid
         while (base.hasNext && base.head._1.qid == q) {
           val (r, m) = base.next()
-          lb += r.label; mb += m(0); wb += r.weight
+          lb += r.label; mb += TreeShape.margin(r, m, pending, 0); wb += r.weight
         }
         groupGradients(lb.toArray, mb.toArray, wb.toArray,
-          variant, expGain, topK, pairMethod, numPair, q, tPlus, tMinus, li, lj,
-          norm, scoreNorm, 1.0) // w_norm scales gpair only, never the t± numerators
+          obj.variant, obj.ndcgExpGain, obj.topK, obj.pairMethod, obj.numPair, q, tPlus, tMinus,
+          li, lj, obj.normalization, obj.scoreNormalization,
+          1.0) // w_norm scales gpair only, never the t± numerators
       }
       Iterator.single((li, lj))
-    }.treeReduce({ case ((a1, a2), (b1, b2)) =>
-      var i = 0
-      while (i < a1.length) { a1(i) += b1(i); a2(i) += b2(i); i += 1 }
-      (a1, a2)
-    }, depth = graft.Agg.depth(rows.getNumPartitions))
+    }
   }
 
   /** Seq-tuple adapter (unit-test surface; the trainer path uses the

@@ -293,10 +293,11 @@ object TrainQueries {
     // flips the hash and turns the row red. The fixture is SINGLE-partition
     // (with minTrainPartitions=0 so it stays that way): near-tie split
     // gains amplify last-ulp float-sum noise into different-but-equally-
-    // valid trees, so bit-stability requires a pinned reduction order —
-    // histograms merge in partition order, but a multi-partition fit's
-    // quantile sketch and base score still merge in task-completion
-    // order, which no engine (reference included) pins across runs.
+    // valid trees, so bit-stability requires a pinned reduction order.
+    // Every trainer merge (sketch, base score, histograms) runs in
+    // partition order, so a multi-partition fit is reproducible for a
+    // fixed partitioning; the single partition also keeps the digest
+    // independent of how Spark would split the fixture.
     "t_hash_hist" -> ((s, _) =>
       hashRow(s, new GBTTrainer(goldenParams()).fit(goldenRows(s)))),
 

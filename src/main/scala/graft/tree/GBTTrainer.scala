@@ -1,5 +1,7 @@
 package graft.tree
 
+import org.apache.spark.TaskContext
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.storage.StorageLevel
 
@@ -73,12 +75,11 @@ final case class TrainParams(
     // training parallelism floor: −1 = auto (repartition up to
     // defaultParallelism when the input arrives under-partitioned, e.g. a
     // single parquet file); 0 = never repartition (pins partition contents;
-    // NOTE histogram and root-total merges run in partition order, so the
-    // boosting loop over fixed partitions and cuts is bit-reproducible; what
-    // still varies between runs of a multi-partition fit is the quantile-
-    // sketch merge and the validation pass's base score, which near-tie
-    // split gains can amplify into different-but-equally-valid trees; see
-    // TrainQueries' golden rows); >0 = explicit floor
+    // NOTE the quantile-sketch, validation-sum, histogram and root-total
+    // merges all run in partition order, so a fit over fixed partitions is
+    // bit-reproducible; a different partitioning changes those sums in the
+    // last ulp, which near-tie split gains can amplify into different-but-
+    // equally-valid trees; see TrainQueries' golden rows); >0 = explicit floor
     minTrainPartitions: Int = -1
 )
 
@@ -113,6 +114,23 @@ final case class TreeShape(
     i
   }
   def predictLeaf(r: BInst): Array[Double] = leaf(position(r))
+}
+
+object TreeShape {
+  /** Group `g`'s cached margin `m(g)` plus the contributions of the
+    * `pending` (tree, weight, group) entries of that group, added in commit
+    * order: the margin of trees committed to the model but not yet flushed
+    * into the margin cache. */
+  def margin(r: BInst, m: Array[Double], pending: Array[(TreeShape, Double, Int)], g: Int): Double = {
+    var out = m(g)
+    var i = 0
+    while (i < pending.length) {
+      val (sh, w, pg) = pending(i)
+      if (pg == g) out += w * sh.predictLeaf(r)(0)
+      i += 1
+    }
+    out
+  }
 }
 
 /** One training instance after quantization: local bin id per feature
@@ -198,6 +216,57 @@ object GBTTrainer {
     val n = trainPartitions(params, data)
     if (n > data.getNumPartitions) data.repartition(n) else data
   }
+
+  /** A cached (row, margins) pair with the pending trees' contributions
+    * added to its margins, in commit order. */
+  private final class AddPending(bP: Broadcast[Array[(TreeShape, Double, Int)]])
+      extends (((BInst, Array[Double])) => (BInst, Array[Double])) with Serializable {
+    def apply(rm: (BInst, Array[Double])): (BInst, Array[Double]) = {
+      val (r, m) = rm
+      val p = bP.value
+      (r, Array.tabulate(m.length)(g => TreeShape.margin(r, m, p, g)))
+    }
+  }
+
+  /** Two packed [[NodePartials]] blocks summed into one, for the merge on
+    * the executors above `Agg.directCutoff` partitions. */
+  private final class MergePartials(nodes: Int, histLen: Int)
+      extends ((Array[Byte], Array[Byte]) => Array[Byte]) with Serializable {
+    def apply(a: Array[Byte], b: Array[Byte]): Array[Byte] =
+      new NodePartials(nodes, histLen).add(a).add(b).pack()
+  }
+
+  /** One partition's query-group count and the sum of each group's first
+    * row weight (rows of a qid are contiguous). */
+  private object GroupWeights extends graft.Agg.PartitionFn[(BInst, Array[Double]), (Long, Double)] {
+    def apply(ctx: TaskContext, it: Iterator[(BInst, Array[Double])]): (Long, Double) = {
+      var n = 0L; var s = 0.0; var last = 0L; var first = true
+      it.foreach { case (r, _) =>
+        if (first || r.qid != last) { n += 1; s += r.weight; last = r.qid; first = false }
+      }
+      (n, s)
+    }
+  }
+
+  /** One partition's sum and count of a per-query-group statistic `f` over
+    * (margin, label) pairs in row order; None leaves a group out. */
+  private final class GroupStats(f: ArrayBuffer[(Double, Double)] => Option[Double])
+      extends graft.Agg.PartitionFn[(BInst, Array[Double]), (Double, Long)] {
+    def apply(ctx: TaskContext, it: Iterator[(BInst, Array[Double])]): (Double, Long) = {
+      val base = it.buffered
+      var sum = 0.0; var cnt = 0L
+      val buf = new ArrayBuffer[(Double, Double)]
+      while (base.hasNext) {
+        buf.clear()
+        val q = base.head._1.qid
+        while (base.hasNext && base.head._1.qid == q) {
+          val (r, m) = base.next(); buf += ((m(0), r.label))
+        }
+        f(buf) match { case Some(v) => sum += v; cnt += 1; case None => }
+      }
+      (sum, cnt)
+    }
+  }
 }
 
 /** Distributed gradient-boosted-tree trainer: the reference's learner loop
@@ -206,7 +275,9 @@ object GBTTrainer {
   * driver-coordinated loop of Spark jobs, one per tree level. Each
   * histogram allreduce (`src/tree/hist/histogram.h:177-202`) becomes one
   * job whose tasks return packed per-partition partials, summed on the
-  * driver in partition order; the collective/tracker/barrier machinery of
+  * driver in partition order. Per-level and per-round jobs go through
+  * [[graft.Agg]] with named per-partition functions, so none pays Spark's
+  * closure-cleaning pass; the collective/tracker/barrier machinery of
   * the reference is replaced by Spark's scheduler (SURVEY §3.1). Split
   * search then runs on the driver's cores, node and feature chunk in
   * parallel.
@@ -333,7 +404,7 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
       baseOverride: Option[Array[Double]] = None)(bin: ((T, Long)) => BInst): BoosterModel = {
     def cached(d: RDD[T]): RDD[BInst] = {
       val b = d.zipWithUniqueId().map(bin).persist(StorageLevel.MEMORY_AND_DISK)
-      b.count()
+      graft.Agg.count(b)
       b
     }
     val binned = cached(data)
@@ -384,7 +455,7 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
     val sc = data.sparkContext
     // derived copy so we never clash with a caller-chosen storage level
     val cached = data.map(identity).persist(StorageLevel.MEMORY_AND_DISK)
-    cached.count()
+    graft.Agg.count(cached)
 
     val badLabels = graft.Agg.aggregate(cached)(0L)((c, r) => if (!obj.validLabel(r._2)) c + 1 else c, _ + _)
     if (badLabels > 0) throw new IllegalArgumentException(
@@ -408,7 +479,7 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
     // a zip across persisted generations
     var cacheRaw: RDD[((Array[Double], Double, Double), Array[Double])] =
       cached.map(r => (r, base.clone())).persist(StorageLevel.MEMORY_AND_DISK)
-    cacheRaw.count()
+    graft.Agg.count(cacheRaw)
     cached.unpersist(blocking = false)
 
     val colSampler = new ColumnSampler(numFeatures, params.seed, params.featureWeights)
@@ -432,7 +503,7 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
       val binned = cacheRaw.zipWithUniqueId().map { case (((f, y, w), m), id) =>
         (BInst(cuts.binRow(f), y, w, id), m)
       }.persist(StorageLevel.MEMORY_AND_DISK)
-      binned.count()
+      graft.Agg.count(binned)
 
       val shape = growTree(binned, None, cuts, numFeatures, obj, null, 0,
         iter, colSampler, Array.empty)
@@ -444,7 +515,7 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
         val o = m.clone(); o(0) += params.eta * bShape.value.predictLeaf(r)(0); (row, o)
       }.persist(StorageLevel.MEMORY_AND_DISK)
       if (checkpointDue(iter, iter + 1)) cacheRaw.localCheckpoint()
-      cacheRaw.count()
+      graft.Agg.count(cacheRaw)
       old.unpersist(blocking = false)
       binned.unpersist(blocking = false)
       iter += 1
@@ -581,7 +652,7 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
       if (needsCoxSort) {
         val sorted = binnedIn.sortBy(r => math.abs(r.label))
           .persist(StorageLevel.MEMORY_AND_DISK)
-        sorted.count()
+        graft.Agg.count(sorted)
         sorted
       } else binnedIn
 
@@ -606,12 +677,12 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
     // storage; the first flush persists its successor.
     var cache: RDD[(BInst, Array[Double])] = initMargins match {
       case Some(m) =>
-        val p = binned.zip(m).persist(StorageLevel.MEMORY_AND_DISK); p.count(); p
+        val p = binned.zip(m).persist(StorageLevel.MEMORY_AND_DISK); graft.Agg.count(p); p
       case None => binned.map(r => (r, base.clone()))
     }
     var watchCaches: Array[RDD[(BInst, Array[Double])]] = watchSets.map { case (_, eb) =>
       val em = eb.map(r => (r, base.clone())).persist(StorageLevel.MEMORY_AND_DISK)
-      em.count(); em
+      graft.Agg.count(em); em
     }.toArray
 
     val shapes = new ArrayBuffer[TreeShape]
@@ -675,14 +746,8 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
     // (weights never change across iterations).
     val rankWeightNorm: Double = obj match {
       case _: LambdaRankObjective =>
-        val (nGroups, sumGW) = cache.mapPartitions { it =>
-          var n = 0L; var s = 0.0; var last = 0L; var first = true
-          it.foreach { case (r, _) =>
-            if (first || r.qid != last) { n += 1; s += r.weight; last = r.qid; first = false }
-          }
-          Iterator.single((n, s))
-        }.treeReduce((a, b) => (a._1 + b._1, a._2 + b._2),
-          depth = graft.Agg.depth(cache.getNumPartitions))
+        val (nGroups, sumGW) = graft.Agg.runJob(cache, GroupWeights)
+          .foldLeft((0L, 0.0))((a, b) => (a._1 + b._1, a._2 + b._2))
         if (sumGW > 0) nGroups.toDouble / sumGW else 1.0
       case _ => 1.0
     }
@@ -691,19 +756,9 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
       // lineage grows one map per flush; truncate every CheckpointInterval rounds
       val checkpoint = checkpointDue(flushedRounds, rounds)
       def flushed(c: RDD[(BInst, Array[Double])]): RDD[(BInst, Array[Double])] = {
-        val next = c.map { case (r, m) =>
-          val out = m.clone()
-          val p = bP.value
-          var i = 0
-          while (i < p.length) {
-            val (sh, w, g) = p(i)
-            out(g) += w * sh.predictLeaf(r)(0)
-            i += 1
-          }
-          (r, out)
-        }.persist(StorageLevel.MEMORY_AND_DISK)
+        val next = c.map(new AddPending(bP)).persist(StorageLevel.MEMORY_AND_DISK)
         if (checkpoint) next.localCheckpoint()
-        next.count()
+        graft.Agg.count(next)
         c.unpersist(blocking = false)
         next
       }
@@ -756,7 +811,7 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
             case _ => CoxGradients.compute(cache, pendingArr)
           }
           val g = raw.persist(StorageLevel.MEMORY_AND_DISK)
-          g.count()
+          graft.Agg.count(g)
           // position-bias update (UpdatePositionBias, lambdarank_obj.cc:103):
           // accumulate this iteration's per-position numerators into the
           // running totals, then re-fit t±(i) = (l(i)/l(0))^regularizer
@@ -782,17 +837,8 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
       // rescaling
       if (gradBased) {
         require(!isMulti, "sampling_method=gradient_based supports single-output objectives")
-        val (uSum, n) = withGrads(cache, globalGrads).mapPartitions { it =>
-          val out = new Array[Double](2)
-          val scratch = new Array[Double](2 * numGroups)
-          var s = 0.0; var c = 0L
-          it.foreach { case (r, m, pre) =>
-            gradOf(r, m, pre, obj, softmax, 0, droppedShapes, out, scratch)
-            s += math.sqrt(out(0) * out(0) + params.lambda * out(1) * out(1))
-            c += 1
-          }
-          Iterator.single((s, c))
-        }.treeReduce((a, b) => (a._1 + b._1, a._2 + b._2), depth = graft.Agg.depth(cache.getNumPartitions))
+        val (uSum, n) = GradPass.run(cache, globalGrads, new GradMagnitudes(obj, droppedShapes))
+          .foldLeft((0.0, 0L))((a, b) => (a._1 + b._1, a._2 + b._2))
         gbMeanU = if (n > 0) uSum / n else 1.0
       }
 
@@ -1225,10 +1271,10 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
   }
 
   // ---- watch metric evaluation (RDD form of graft.metric.Metrics for the
-  // training loop — one treeAggregate per evaluated iteration) -------------
+  // training loop — one Agg job per evaluated metric and iteration) --------
 
   /** ONE metric-name registry for every facade (train/cv/estimators):
-    * elementwise names run as fused treeAggregates; ranking names
+    * elementwise names run as fused `Agg.aggregate`s; ranking names
     * (ndcg@k/map@k/pre@k, ranking auc) walk the qid-co-partitioned groups
     * in place (no shuffle); global-sweep names (auc/aucpr, multiclass OvR
     * auc, cox-nloglik) delegate to the oracle-verified DataFrame kernels in
@@ -1374,20 +1420,8 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
     * handling, `auc.cc:206`). */
   private def groupMean(c: RDD[(BInst, Array[Double])])(
       f: ArrayBuffer[(Double, Double)] => Option[Double]): Double = {
-    val (s, n) = c.mapPartitions { it =>
-      val base = it.buffered
-      var sum = 0.0; var cnt = 0L
-      val buf = new ArrayBuffer[(Double, Double)]
-      while (base.hasNext) {
-        buf.clear()
-        val q = base.head._1.qid
-        while (base.hasNext && base.head._1.qid == q) {
-          val (r, m) = base.next(); buf += ((m(0), r.label))
-        }
-        f(buf) match { case Some(v) => sum += v; cnt += 1; case None => }
-      }
-      Iterator.single((sum, cnt))
-    }.treeReduce((a, b) => (a._1 + b._1, a._2 + b._2), depth = graft.Agg.depth(c.getNumPartitions))
+    val (s, n) = graft.Agg.runJob(c, new GroupStats(f))
+      .foldLeft((0.0, 0L))((a, b) => (a._1 + b._1, a._2 + b._2))
     if (n > 0) s / n else 0.0
   }
 
@@ -1535,20 +1569,6 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
     out
   }
 
-  /** Attach the (optional) precomputed per-row gradients to the packed
-    * (row, margin) cache. The gradients RDD is derived from `cache` by a
-    * mapPartitions-style transform in the SAME iteration (never persisted
-    * across margin generations), so the zip is positional, shuffle-free
-    * and alignment-safe. `pre == null` ⇒ compute from the objective
-    * kernel. */
-  private def withGrads(
-      cache: RDD[(BInst, Array[Double])],
-      grads: Option[RDD[Array[Double]]]): RDD[(BInst, Array[Double], Array[Double])] =
-    grads match {
-      case Some(g) => cache.zip(g).map { case ((r, m), gh) => (r, m, gh) }
-      case None => cache.map { case (r, m) => (r, m, null) }
-    }
-
   private def gradOf(
       r: BInst, m: Array[Double], pre: Array[Double], obj: Objective,
       softmax: SoftmaxObjective,
@@ -1580,13 +1600,16 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
     * of `HistogramBuilder::BuildHist` + allreduce (`histogram.h:44-202`):
     * per-partition dense accumulation (allocation-free inner loop) that
     * also sums each node's (G, H) totals (the root's totals come from
-    * here). Each task ships its partials as one packed [[NodePartials]]
-    * block; the driver sums the blocks in partition-index order, so the
+    * here). The pass is one [[graft.Agg]] job of the named
+    * [[HistogramPass]] over the cache (zipped with the precomputed
+    * gradients when there are any). Each task ships its partials as one
+    * packed [[NodePartials]] block; the driver sums the blocks in
+    * partition-index order as they arrive (`Agg.foldPartials`), so the
     * result does not depend on which task finished first. Above
     * `Agg.directCutoff` partitions the blocks merge through `Agg`'s
-    * two-level tree instead, to cap driver fan-in. Hist layout per node:
-    * g at 2·bin, h at 2·bin+1 in global bin space; a node no sampled row
-    * reached gets zeros. */
+    * two-level tree on the executors instead, to cap driver fan-in. Hist
+    * layout per node: g at 2·bin, h at 2·bin+1 in global bin space; a node
+    * no sampled row reached gets zeros. */
   private def aggregateHistograms(
       cache: RDD[(BInst, Array[Double])],
       globalGrads: Option[RDD[Array[Double]]], cuts: HistogramCuts,
@@ -1598,20 +1621,32 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
     val bShape = sc.broadcast(shape)
     val histLen = 2 * cuts.totalBins
     val nBuild = buildSet.length
-    val offsets = cuts.featureOffset
-    val numFeatures = cuts.numFeatures
     // dense position→slot map (node ids are small ints)
     val maxNid = if (buildSet.isEmpty) 0 else buildSet.max
     val slotOf = Array.fill(maxNid + 1)(-1)
     buildSet.zipWithIndex.foreach { case (nid, s) => slotOf(nid) = s }
 
-    val partials = withGrads(cache, globalGrads).mapPartitions { it =>
-      val acc = new NodePartials(nBuild, histLen)
+    val pass = new HistogramPass(bShape, slotOf, histLen, cuts.featureOffset, cuts.numFeatures,
+      obj, softmax, grp, iter, dropped)
+    val merged = graft.Agg.foldPartials(GradPass.partials(cache, globalGrads, pass),
+      new MergePartials(nBuild, histLen))(new NodePartials(nBuild, histLen))(_ add _)
+    bShape.destroy()
+    merged
+  }
+
+  /** One partition's histogram partials for [[aggregateHistograms]]. */
+  private final class HistogramPass(bShape: Broadcast[TreeShape], slotOf: Array[Int],
+      histLen: Int, offsets: Array[Int], numFeatures: Int, obj: Objective,
+      softmax: SoftmaxObjective, grp: Int, iter: Int,
+      dropped: Array[(TreeShape, Double, Int)]) extends GradPass[Array[Byte]] {
+    def apply(rows: Iterator[(BInst, Array[Double], Array[Double])]): Array[Byte] = {
+      val maxNid = slotOf.length - 1
+      val acc = new NodePartials(slotOf.count(_ >= 0), histLen)
       val tot = acc.totals
       val out = new Array[Double](2)
       val scratch = new Array[Double](2 * numGroups)
       val sh = bShape.value
-      it.foreach { case (r, m, pre) =>
+      rows.foreach { case (r, m, pre) =>
         if (gradBased || sampled(r.rowId, iter)) {
           val pos = sh.position(r)
           val slot = if (pos <= maxNid) slotOf(pos) else -1
@@ -1621,47 +1656,57 @@ final class GBTTrainer(params: TrainParams) extends Serializable {
               if (gradBased) gradientSampleScale(r.rowId, iter, out(0), out(1)) else 1.0
             val g = sampleScale * out(0); val h = sampleScale * out(1)
             if (sampleScale > 0) {
-            val hist = acc.hist(slot)
-            tot(2 * slot) += g; tot(2 * slot + 1) += h
-            if (r.idx == null) {
-              var f = 0
-              while (f < numFeatures) {
-                val b = r.bins(f)
-                if (b >= 0) {
-                  val gb = 2 * (offsets(f) + b)
-                  hist(gb) += g
-                  hist(gb + 1) += h
+              val hist = acc.hist(slot)
+              tot(2 * slot) += g; tot(2 * slot + 1) += h
+              if (r.idx == null) {
+                var f = 0
+                while (f < numFeatures) {
+                  val b = r.bins(f)
+                  if (b >= 0) {
+                    val gb = 2 * (offsets(f) + b)
+                    hist(gb) += g
+                    hist(gb + 1) += h
+                  }
+                  f += 1
                 }
-                f += 1
-              }
-            } else {
-              // sparse row: O(nnz) accumulation over present features only;
-              // absent mass reaches the split search as (total − Σ bins),
-              // i.e. the same missing-direction machinery as NaN
-              var k = 0
-              while (k < r.idx.length) {
-                val b = r.bins(k)
-                if (b >= 0) {
-                  val gb = 2 * (offsets(r.idx(k)) + b)
-                  hist(gb) += g
-                  hist(gb + 1) += h
+              } else {
+                // sparse row: O(nnz) accumulation over present features only;
+                // absent mass reaches the split search as (total − Σ bins),
+                // i.e. the same missing-direction machinery as NaN
+                var k = 0
+                while (k < r.idx.length) {
+                  val b = r.bins(k)
+                  if (b >= 0) {
+                    val gb = 2 * (offsets(r.idx(k)) + b)
+                    hist(gb) += g
+                    hist(gb + 1) += h
+                  }
+                  k += 1
                 }
-                k += 1
               }
-            }
             }
           }
         }
       }
-      Iterator.single(acc.pack())
+      acc.pack()
     }
-    val merged = new NodePartials(nBuild, histLen)
-    if (partials.getNumPartitions <= graft.Agg.directCutoff)
-      sc.runJob(partials, (it: Iterator[Array[Byte]]) => it.next()).foreach(merged.add)
-    else merged.add(graft.Agg.reduce(partials)((a, b) =>
-      new NodePartials(nBuild, histLen).add(a).add(b).pack()))
-    bShape.destroy()
-    merged
+  }
+
+  /** One partition's Σ√(g² + λh²) and row count, for gradient-based
+    * sampling's mean regularized gradient magnitude. */
+  private final class GradMagnitudes(obj: Objective, dropped: Array[(TreeShape, Double, Int)])
+      extends GradPass[(Double, Long)] {
+    def apply(rows: Iterator[(BInst, Array[Double], Array[Double])]): (Double, Long) = {
+      val out = new Array[Double](2)
+      val scratch = new Array[Double](2 * numGroups)
+      var s = 0.0; var c = 0L
+      rows.foreach { case (r, m, pre) =>
+        gradOf(r, m, pre, obj, null, 0, dropped, out, scratch)
+        s += math.sqrt(out(0) * out(0) + params.lambda * out(1) * out(1))
+        c += 1
+      }
+      (s, c)
+    }
   }
 }
 
